@@ -1,48 +1,44 @@
 """Benchmark harness.
 
 Prints ONE COMPACT JSON line (per-stage detail goes to
-BENCH/bench_detail.json — inlining it made the line unparseable for
-the driver two rounds running):
+BENCH/bench_detail.json so the line stays short enough to parse):
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: floor_sec, ...}, "sf": ...,
-   "dedup": {n_docs, wall_sec, docs_per_sec, docs_per_sec_floor,
-             recall, false_merges},
+   "queries": {name: best_sec, ...}, "sf": ...,
+   "dedup": {n_docs, wall_sec, docs_per_sec, recall, false_merges},
    "scaling": {cores_lo, cores_hi, n_docs,
                this_run: {efficiency, efficiency_compute,
-                          efficiency_median_round, ...},   # HEADLINE
-               floor_bound: {...}}}                        # supplementary
+                          efficiency_per_round, ...}},
+   "tick": {scratch_wall_sec, tick_wall_sec, sizes, growth, ...}}
 
 and refreshes BENCH/BASELINE.md with the scaling-efficiency evidence
 (north rule: same job at N and 4N parallelism on the same input;
 efficiency = (throughput_hi / throughput_lo) / (cores_hi / cores_lo)).
-The headline scaling statistic comes from THIS invocation alone (own
-floors + median of per-round efficiencies); the cross-invocation
-cumulative floor is reported as a supplementary bound because it
-monotonically improves with reruns.
+Every figure is the wall of a run THIS invocation made: best-of-N for
+the queries, the dedup run and each tick size; the median of the
+interleaved rounds for scaling. Per-stage task time, job counts and
+driver gaps come from ``perfbench/run.py --trace 1``.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), BENCH_N_DOCS (default 20000),
-BENCH_SCALING=0 to skip the scaling runs.
+SPARK_GRAFT_CPUS (default: the session factory's, all visible cores),
+BENCH_N_DOCS (default 20000), BENCH_SCALING=0 to skip the scaling runs.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_DOCS = int(os.environ.get("BENCH_N_DOCS", "20000"))
 DO_SCALING = os.environ.get("BENCH_SCALING", "1") != "0"
-BENCH_RUNS = int(os.environ.get("BENCH_RUNS", "3"))  # best-of-N per level
-# headline queries use the same best-of-N floor methodology as the
-# pipeline (single-shot numbers on this host are steal noise — r2's
-# apparent headline regressions were uninterpretable, VERDICT r2 #3)
+BENCH_RUNS = int(os.environ.get("BENCH_RUNS", "3"))  # best-of-N dedup runs
+# headline queries are best-of-N too: single-shot numbers on this host
+# are steal noise
 HEADLINE_RUNS = int(os.environ.get("BENCH_HEADLINE_RUNS", "3"))
 # scaling evidence uses a larger corpus so per-stage fixed costs (job
 # scheduling, checkpoint commits — constants that vanish at production
@@ -50,8 +46,8 @@ HEADLINE_RUNS = int(os.environ.get("BENCH_HEADLINE_RUNS", "3"))
 N_SCALING = int(os.environ.get("BENCH_SCALING_N_DOCS", str(max(N_DOCS, 200000))))
 SCALING_RUNS = int(os.environ.get("BENCH_SCALING_RUNS", "4"))
 # soft wall budget for the whole bench: scaling rounds after the first
-# are skipped once 80% is spent, so floors degrade gracefully instead
-# of the bench overrunning an external timeout
+# are skipped once 65% is spent and tick cycles after the first two
+# once 90% is, so the bench never overruns an external timeout
 BUDGET_SEC = int(os.environ.get("BENCH_BUDGET_SEC", "2400"))
 # N vs 4N pair for the scaling evidence. Defaults to 1 vs 4: host
 # calibration (BENCH/EVIDENCE.md) shows this overcommitted VM delivers
@@ -59,8 +55,7 @@ BUDGET_SEC = int(os.environ.get("BENCH_BUDGET_SEC", "2400"))
 # 17 GB/s aggregate, so any hi level demanding >8 concurrent threads
 # (Spark = task threads + python workers + JVM services) measures the
 # host ceiling, not the engine. 1 vs 4 keeps both levels inside the
-# host's linear region; per-stage executor task time is recorded so
-# fixed costs and contention inflation are separately accounted.
+# host's linear region.
 SCALE_HI = int(os.environ.get("BENCH_SCALE_HI", "4"))
 SCALE_LO = max(1, SCALE_HI // 4)
 # tick benchmark: fraction of the corpus appended as the tick frontier
@@ -102,25 +97,22 @@ HEADLINE = [
 ]
 
 
-def _fresh_spark(cores: int, ui: bool = False):
+def _fresh_spark(cores: int | None = None):
     from deduplicator_go_spark.session import get_spark
 
-    return get_spark(
-        "bench", cores=cores, shuffle_partitions=max(8, cores),
-        extra_conf={"spark.ui.enabled": "true"} if ui else None,
-    )
+    return get_spark("bench", cores=cores)
 
 
 def run_headline() -> tuple[dict[str, float], dict[str, float]]:
-    """Best-of-N floors per headline query (fresh session per pass so a
-    steal burst in one pass can't poison every query's floor). Returns
-    (floor, worst) so the spread is recorded alongside."""
+    """Best-of-N time per headline query (fresh session per pass so a
+    steal burst in one pass can't poison every query's time). Returns
+    (best, worst) so the spread is recorded alongside."""
     import __spark_entry__ as E
 
     mins: dict[str, float] = {}
     maxs: dict[str, float] = {}
     for _ in range(HEADLINE_RUNS):
-        spark = _fresh_spark(CPUS)
+        spark = _fresh_spark()
         qs = E.queries()
         for name in HEADLINE:
             t0 = time.time()
@@ -132,150 +124,8 @@ def run_headline() -> tuple[dict[str, float], dict[str, float]]:
     return mins, maxs
 
 
-def _scaling_code_fingerprint() -> str:
-    """Fingerprint of exactly the code the scaling job executes (the
-    dedup pipeline path) + the scaling parameters. Gates the cross-
-    invocation floor cache: floors only merge while the measured job
-    is bit-identical."""
-    import hashlib
-
-    h = hashlib.sha256()
-    base = os.path.dirname(os.path.abspath(__file__))
-    for rel in [
-        "deduplicator_go_spark/config.py",
-        "deduplicator_go_spark/session.py",
-        "deduplicator_go_spark/fixtures/webtext.py",
-        "deduplicator_go_spark/plans/pipeline.py",
-        "deduplicator_go_spark/sources/catalog.py",
-        "deduplicator_go_spark/operators/exact.py",
-        "deduplicator_go_spark/operators/minhash.py",
-        "deduplicator_go_spark/operators/lsh.py",
-        "deduplicator_go_spark/operators/verify.py",
-        "deduplicator_go_spark/operators/components.py",
-        "deduplicator_go_spark/operators/suffix.py",
-    ]:
-        with open(os.path.join(base, rel), "rb") as f:
-            h.update(f.read())
-    h.update(f"{N_SCALING}|{SCALE_LO}|{SCALE_HI}".encode())
-    return h.hexdigest()[:16]
-
-
-FLOORS_CACHE = os.environ.get(
-    "BENCH_FLOORS_CACHE",
-    os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                 "BENCH", "scaling_floors.json"),
-)
-
-
-def _merge_floor_cache(lo_runs, hi_runs, lo_task, hi_task, rounds_done) -> dict:
-    """Merge this invocation's per-stage floors into the persisted
-    cross-invocation cache (same code, same input, same levels → floors
-    across bench invocations compose exactly like extra interleaved
-    rounds within one: the minimum converges on the engine's
-    contention-free speed regardless of any single run's host state).
-    Returns the merged cache entry; resets automatically whenever the
-    measured code or scaling parameters change."""
-    fp = _scaling_code_fingerprint()
-    cache = None
-    if os.path.exists(FLOORS_CACHE):
-        try:
-            with open(FLOORS_CACHE) as f:
-                stored = json.load(f)
-            if stored.get("fingerprint") == fp:
-                cache = stored
-        except Exception:
-            cache = None
-    if cache is None:
-        cache = {"fingerprint": fp, "rounds_total": 0, "invocations": 0,
-                 "lo": {}, "hi": {}, "lo_task": {}, "hi_task": {}}
-
-    def merge(dst: dict, src: dict) -> None:
-        for k, v in src.items():
-            dst[k] = min(dst.get(k, 1 << 60), v)
-
-    merge(cache["lo"], lo_runs)
-    merge(cache["hi"], hi_runs)
-    merge(cache["lo_task"], lo_task)
-    merge(cache["hi_task"], hi_task)
-    cache["rounds_total"] += rounds_done
-    cache["invocations"] += 1
-    os.makedirs(os.path.dirname(FLOORS_CACHE), exist_ok=True)
-    with open(FLOORS_CACHE + ".tmp", "w") as f:
-        json.dump(cache, f, indent=1)
-    os.replace(FLOORS_CACHE + ".tmp", FLOORS_CACHE)
-    return cache
-
-
-TICK_FLOORS_CACHE = os.environ.get(
-    "BENCH_TICK_FLOORS_CACHE",
-    os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                 "BENCH", "tick_floors.json"),
-)
-
-
-def _merge_tick_floor_cache(per_size: dict[int, dict]) -> dict:
-    """Same cross-invocation floor statistic as _merge_floor_cache,
-    for the tick benchmark: identical code + corpus + tick parameters
-    mean per-stage minima across invocations compose exactly like
-    extra cycles within one, converging on the engine's contention-
-    free tick cost regardless of any single invocation's host steal.
-    Keyed per corpus size (the two-size frontier-proportionality
-    evidence needs clean floors at BOTH sizes). Fingerprint-gated:
-    resets whenever the measured code or the tick parameters change.
-
-    ``per_size``: {n_docs: {"scratch": stage_mins, "tick": stage_mins,
-    "cycles": int}} from this invocation."""
-    h = hashlib.sha256(_scaling_code_fingerprint().encode())
-    h.update(f"|tick:{TICK_N_DOCS}|{TICK_SIZE_MULT}|{TICK_FRAC}|{CPUS}".encode())
-    fp = h.hexdigest()[:16]
-    cache = None
-    if os.path.exists(TICK_FLOORS_CACHE):
-        try:
-            with open(TICK_FLOORS_CACHE) as f:
-                stored = json.load(f)
-            if stored.get("fingerprint") == fp:
-                cache = stored
-        except Exception:
-            cache = None
-    if cache is None:
-        cache = {"fingerprint": fp, "invocations": 0, "sizes": {}}
-
-    def merge(dst: dict, src: dict) -> None:
-        for k, v in src.items():
-            dst[k] = min(dst.get(k, 1 << 60), v)
-
-    for n, d in per_size.items():
-        slot = cache["sizes"].setdefault(
-            str(n), {"cycles_total": 0, "scratch": {}, "tick": {}}
-        )
-        merge(slot["scratch"], d["scratch"])
-        merge(slot["tick"], d["tick"])
-        slot["cycles_total"] += d["cycles"]
-    cache["invocations"] += 1
-    os.makedirs(os.path.dirname(TICK_FLOORS_CACHE), exist_ok=True)
-    with open(TICK_FLOORS_CACHE + ".tmp", "w") as f:
-        json.dump(cache, f, indent=1)
-    os.replace(TICK_FLOORS_CACHE + ".tmp", TICK_FLOORS_CACHE)
-    return cache
-
-
-def _rest_totals(spark) -> dict:
-    """Completed-stage executor task-time totals from the UI REST API
-    (present only when the session was built with the UI enabled)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-            st = json.load(r)
-        return {"run_ms": sum(s.get("executorRunTime", 0) for s in st)}
-    except Exception:
-        return {"run_ms": 0}
-
-
-def run_pipeline(spark, docs_parquet: str, n_docs: int, corpus=None,
-                 task_time: bool = False, ckpt_root: str | None = None) -> dict:
+def run_pipeline(spark, docs_parquet: str, corpus=None,
+                 ckpt_root: str | None = None) -> dict:
     from deduplicator_go_spark.config import DedupConfig
     from deduplicator_go_spark.plans.pipeline import DedupPipeline
     from deduplicator_go_spark.sources.catalog import CheckpointCatalog
@@ -289,27 +139,14 @@ def run_pipeline(spark, docs_parquet: str, n_docs: int, corpus=None,
     try:
         cfg = DedupConfig()
         pipe = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True)
-        stage_run_ms: dict[str, int] = {}
-        if task_time:
-            def wrap(orig):
-                def instrumented(name, build, *a, **kw):
-                    before = _rest_totals(spark)["run_ms"]
-                    r = orig(name, build, *a, **kw)
-                    stage_run_ms[name] = _rest_totals(spark)["run_ms"] - before
-                    return r
-                return instrumented
-
-            pipe._stage = wrap(pipe._stage)
-            pipe._incremental_stage = wrap(pipe._incremental_stage)
         report = pipe.run(docs)
         out = {
             "n_docs": report.docs_in,
+            "cores": spark.sparkContext.defaultParallelism,
             "wall_sec": round(report.wall_sec, 3),
             "docs_per_sec": round(report.docs_per_sec(), 1),
             "stages": {s.name: s.wall_ms for s in report.stages},
         }
-        if task_time:
-            out["stage_run_ms"] = stage_run_ms
         if corpus is not None:
             from deduplicator_go_spark.metrics import pair_recall
 
@@ -357,9 +194,9 @@ def run_tick_bench(corpus_dir: str, deadline: float | None = None) -> dict:
     evidence — scratch wall grows ~linearly with corpus size, tick
     wall stays ~flat — is the frontier-proportionality proof; the
     headline ratio is reported at the larger size (the operating
-    model: standing corpus >> tick). Best-of-N cycle floors +
-    cross-invocation per-size floor cache absorb host steal the same
-    way the scaling rounds do."""
+    model: standing corpus >> tick). Each size reports its fastest
+    cycle's scratch and tick walls, which absorbs host steal the same
+    way best-of-N does for the dedup run."""
     from deduplicator_go_spark.fixtures.webtext import generate
 
     n_small = TICK_N_DOCS
@@ -367,7 +204,7 @@ def run_tick_bench(corpus_dir: str, deadline: float | None = None) -> dict:
     # one deterministic generation at the large size; the small corpus
     # is its prefix (same document distribution, deterministic)
     docs_all = generate(n_docs=n_large, seed=42).documents.drop(columns=["kind"])
-    paths: dict[int, tuple[str, str, int]] = {}
+    paths: dict[int, tuple[str, str]] = {}
     for n in {n_small, n_large}:
         n_base = int(n * (1 - TICK_FRAC))
         base_pq = os.path.join(corpus_dir, f"documents_tick_base_{n}.parquet")
@@ -376,14 +213,11 @@ def run_tick_bench(corpus_dir: str, deadline: float | None = None) -> dict:
                        (docs_all.iloc[:n], full_pq)):
             df.to_parquet(pq, coerce_timestamps="us",
                           allow_truncated_timestamps=True, row_group_size=4096)
-        paths[n] = (base_pq, full_pq, n_base)
+        paths[n] = (base_pq, full_pq)
 
     ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    acc: dict[int, dict] = {
-        n: {"scratch": {}, "tick": {}, "cycles": 0,
-            "scratch_best": None, "tick_best": None}
-        for n in {n_small, n_large}
-    }
+    # per size: cycle count and the fastest scratch and tick runs
+    best: dict[int, dict] = {}
     # large first (the headline regime is guaranteed a cycle), then
     # small (the growth evidence), then alternate; the first cycle at
     # EACH size runs regardless of deadline — growth evidence needs
@@ -394,121 +228,95 @@ def run_tick_bench(corpus_dir: str, deadline: float | None = None) -> dict:
     for i, n in enumerate(order[:max(TICK_RUNS, 2)]):
         if i > 1 and deadline is not None and time.time() > deadline:
             break
-        base_pq, full_pq, n_base = paths[n]
-        a = acc[n]
-        a["cycles"] += 1
+        base_pq, full_pq = paths[n]
         root = tempfile.mkdtemp(prefix="bench-tick-", dir=ckpt_base)
         try:
-            s = _fresh_spark(CPUS)
-            r0 = run_pipeline(s, base_pq, n_base, ckpt_root=root)
-            r1 = run_pipeline(s, full_pq, n, ckpt_root=root)
+            s = _fresh_spark()
+            r0 = run_pipeline(s, base_pq, ckpt_root=root)
+            r1 = run_pipeline(s, full_pq, ckpt_root=root)
             s.stop()
         finally:
             shutil.rmtree(root, ignore_errors=True)
-        for k, v in r0["stages"].items():
-            a["scratch"][k] = min(a["scratch"].get(k, 1 << 60), v)
-        for k, v in r1["stages"].items():
-            a["tick"][k] = min(a["tick"].get(k, 1 << 60), v)
-        if a["scratch_best"] is None or r0["wall_sec"] < a["scratch_best"]["wall_sec"]:
-            a["scratch_best"] = r0
-        if a["tick_best"] is None or r1["wall_sec"] < a["tick_best"]["wall_sec"]:
-            a["tick_best"] = r1
+        b = best.setdefault(n, {"cycles": 0, "scratch": r0, "tick": r1})
+        b["cycles"] += 1
+        if r0["wall_sec"] < b["scratch"]["wall_sec"]:
+            b["scratch"] = r0
+        if r1["wall_sec"] < b["tick"]["wall_sec"]:
+            b["tick"] = r1
 
-    ran = {n: a for n, a in acc.items() if a["cycles"] > 0}
-    merged = _merge_tick_floor_cache(ran)
-
-    def _size_report(n: int) -> dict | None:
-        a = acc[n]
-        if a["cycles"] == 0:
-            return None
-        frontier = a["tick_best"]["n_docs"] - a["scratch_best"]["n_docs"]
-        out = {
-            "n_base_docs": a["scratch_best"]["n_docs"],
-            "frontier_docs": frontier,
-            "cycles": a["cycles"],
-            "scratch_wall_sec": a["scratch_best"]["wall_sec"],
-            "tick_wall_sec": a["tick_best"]["wall_sec"],
-            "scratch_floor_sec": round(sum(a["scratch"].values()) / 1000.0, 3),
-            "tick_floor_sec": round(sum(a["tick"].values()) / 1000.0, 3),
+    sizes = {
+        n: {
+            "n_base_docs": b["scratch"]["n_docs"],
+            "frontier_docs": b["tick"]["n_docs"] - b["scratch"]["n_docs"],
+            "cycles": b["cycles"],
+            "scratch_wall_sec": b["scratch"]["wall_sec"],
+            "tick_wall_sec": b["tick"]["wall_sec"],
         }
-        slot = merged["sizes"].get(str(n))
-        if slot:
-            sfb = sum(slot["scratch"].values()) / 1000.0
-            tfb = sum(slot["tick"].values()) / 1000.0
-            out["floor_bound"] = {
-                "cycles_total": slot["cycles_total"],
-                "scratch_floor_sec": round(sfb, 3),
-                "tick_floor_sec": round(tfb, 3),
-            }
-        return out
+        for n, b in sorted(best.items())
+    }
 
-    sizes = {n: _size_report(n) for n in sorted(acc)}
-    sizes = {n: v for n, v in sizes.items() if v}
-
-    # frontier-proportionality evidence from the cross-invocation
-    # floor bounds (cleanest statistic available at both sizes)
+    # frontier-proportionality evidence: the fastest walls at each size
     growth = None
-    sl, ll = merged["sizes"].get(str(n_small)), merged["sizes"].get(str(n_large))
-    if sl and ll and n_small != n_large:
-        s_s = sum(sl["scratch"].values()) / 1000.0
-        s_l = sum(ll["scratch"].values()) / 1000.0
-        t_s = sum(sl["tick"].values()) / 1000.0
-        t_l = sum(ll["tick"].values()) / 1000.0
-        if s_s and t_s:
-            growth = {
-                "corpus_growth": round(n_large / n_small, 2),
-                "scratch_wall_growth": round(s_l / s_s, 2),
-                "tick_wall_growth": round(t_l / t_s, 2),
-                "note": "tick pays fixed job latency + work proportional to "
-                        "the FRONTIER (frac x corpus); scratch pays work "
-                        "proportional to the CORPUS — so tick wall growth "
-                        "must sit far below scratch wall growth",
-            }
-
-    # headline = the largest size that ran (operating model: standing
-    # corpus >> tick)
-    n_head = max(sizes) if sizes else n_large
-    head = sizes.get(n_head) or {}
-    a = acc[n_head]
-    frontier_docs = head.get("frontier_docs", 0)
-    slot = merged["sizes"].get(str(n_head))
-    floor_bound = None
-    if slot:
-        sfb = sum(slot["scratch"].values()) / 1000.0
-        tfb = sum(slot["tick"].values()) / 1000.0
-        floor_bound = {
-            "invocations": merged["invocations"],
-            "cycles_total": slot["cycles_total"],
-            "scratch_floor_sec": round(sfb, 3),
-            "tick_floor_sec": round(tfb, 3),
-            "scratch_speedup": round(sfb / tfb, 2) if tfb else None,
-            "tick_docs_per_sec": round(frontier_docs / tfb, 1) if tfb else 0.0,
-            "floors": "cumulative per-stage minima across invocations "
-                      "(code+params-fingerprint-gated; BENCH/tick_floors.json)",
+    if n_small != n_large:
+        sm, lg = sizes[n_small], sizes[n_large]
+        growth = {
+            "corpus_growth": round(n_large / n_small, 2),
+            "scratch_wall_growth": round(lg["scratch_wall_sec"] / sm["scratch_wall_sec"], 2),
+            "tick_wall_growth": round(lg["tick_wall_sec"] / sm["tick_wall_sec"], 2),
+            "note": "tick pays fixed job latency + work proportional to "
+                    "the FRONTIER (frac x corpus); scratch pays work "
+                    "proportional to the CORPUS — so tick wall growth "
+                    "must sit far below scratch wall growth",
         }
+
+    # headline = the larger size (operating model: standing corpus >> tick)
+    head = sizes[n_large]
     return {
         "tick_frac": TICK_FRAC,
-        "runs": sum(x["cycles"] for x in acc.values()),
-        "headline_n_docs": n_head,
-        "n_base_docs": head.get("n_base_docs"),
-        "frontier_docs": frontier_docs,
-        "scratch_wall_sec": head.get("scratch_wall_sec"),
-        "tick_wall_sec": head.get("tick_wall_sec"),
-        "scratch_floor_sec": head.get("scratch_floor_sec"),
-        "tick_floor_sec": head.get("tick_floor_sec"),
-        "tick_docs_per_sec": round(frontier_docs / head["tick_wall_sec"], 1)
-        if head.get("tick_wall_sec") else 0.0,
-        "tick_vs_scratch_ratio": round(
-            head["tick_wall_sec"] / head["scratch_wall_sec"], 4
-        ) if head.get("scratch_wall_sec") else None,
-        "scratch_speedup": round(
-            head["scratch_wall_sec"] / head["tick_wall_sec"], 2
-        ) if head.get("tick_wall_sec") else None,
+        "runs": sum(b["cycles"] for b in best.values()),
+        "headline_n_docs": n_large,
+        "n_base_docs": head["n_base_docs"],
+        "frontier_docs": head["frontier_docs"],
+        "scratch_wall_sec": head["scratch_wall_sec"],
+        "tick_wall_sec": head["tick_wall_sec"],
+        "tick_docs_per_sec": round(head["frontier_docs"] / head["tick_wall_sec"], 1),
+        "tick_vs_scratch_ratio": round(head["tick_wall_sec"] / head["scratch_wall_sec"], 4),
+        "scratch_speedup": round(head["scratch_wall_sec"] / head["tick_wall_sec"], 2),
         "sizes": sizes,
         "growth": growth,
-        "floor_bound": floor_bound,
-        "per_stage_scratch_ms": a["scratch"],
-        "per_stage_tick_ms": a["tick"],
+        # per-stage walls of the headline size's fastest runs (detail only)
+        "per_stage_scratch_ms": best[n_large]["scratch"]["stages"],
+        "per_stage_tick_ms": best[n_large]["tick"]["stages"],
+    }
+
+
+def _scaling_stats(rounds: list[dict], ratio: float) -> dict:
+    """Scaling efficiency from this invocation's interleaved rounds. Each
+    round's lo and hi run walls give one efficiency; the headline is the
+    median round. ``efficiency_compute`` is the same statistic over the
+    walls of the data-scaling stages only."""
+    def compute_sec(r: dict) -> float:
+        return sum(r["stages"].get(s, 0) for s in SCALABLE_STAGES) / 1000.0
+
+    effs = sorted(rr["lo"]["wall_sec"] / rr["hi"]["wall_sec"] / ratio for rr in rounds)
+    effs_c = [compute_sec(rr["lo"]) / compute_sec(rr["hi"]) / ratio for rr in rounds]
+    wall_lo = statistics.median(rr["lo"]["wall_sec"] for rr in rounds)
+    wall_hi = statistics.median(rr["hi"]["wall_sec"] for rr in rounds)
+    eff = round(statistics.median(effs), 3)
+    return {
+        "rounds": len(rounds),
+        "efficiency": eff,
+        "efficiency_median_round": eff,
+        "efficiency_per_round": [round(e, 3) for e in effs],
+        "efficiency_compute": round(statistics.median(effs_c), 3),
+        "wall_lo_sec": round(wall_lo, 2),
+        "wall_hi_sec": round(wall_hi, 2),
+        "docs_per_sec_lo": round(N_SCALING / wall_lo, 1),
+        "docs_per_sec_hi": round(N_SCALING / wall_hi, 1),
+        # per-stage walls of every run (detail only)
+        "stage_ms_per_round": [
+            {level: r["stages"] for level, r in rr.items()} for rr in rounds
+        ],
     }
 
 
@@ -533,31 +341,15 @@ def main() -> None:
     try:
         queries, queries_hi = run_headline()
 
-        def best_of(cores: int, n_runs: int, with_recall: bool, path: str = docs_parquet) -> dict:
-            """Fresh session per run; keep the fastest and also compose a
-            per-stage-minimum 'floor' estimate. The sandbox host
-            overcommits vCPUs (~25% historical steal in /proc/stat, with
-            multi-second full stalls observed on identical JVM work), so
-            single runs are noisy; the floor composition — sum over
-            stages of the minimum stage time across runs — estimates
-            contention-free engine speed and is reported separately."""
-            best = None
-            stage_mins: dict[str, int] = {}
-            for i in range(n_runs):
-                s = _fresh_spark(cores)
-                r = run_pipeline(s, path, N_DOCS, corpus if with_recall else None)
-                s.stop()
-                for k, v in r["stages"].items():
-                    stage_mins[k] = min(stage_mins.get(k, 1 << 60), v)
-                if best is None or r["docs_per_sec"] > best["docs_per_sec"]:
-                    best = r
-            floor_sec = sum(stage_mins.values()) / 1000.0
-            best["stage_floor_ms"] = stage_mins
-            best["wall_floor_sec"] = round(floor_sec, 3)
-            best["docs_per_sec_floor"] = round(best["n_docs"] / floor_sec, 1) if floor_sec else 0.0
-            return best
-
-        dedup_hi = best_of(CPUS, BENCH_RUNS, with_recall=True)
+        # fresh session per run, keep the fastest: the host steals CPU
+        # in bursts, so single runs are noisy
+        dedup_hi = None
+        for _ in range(BENCH_RUNS):
+            s = _fresh_spark()
+            r = run_pipeline(s, docs_parquet, corpus)
+            s.stop()
+            if dedup_hi is None or r["wall_sec"] < dedup_hi["wall_sec"]:
+                dedup_hi = r
 
         # scaling runs BEFORE the tick benchmark: the north rule's
         # >=0.8 efficiency is the graded criterion and its this-run
@@ -588,129 +380,28 @@ def main() -> None:
             # run). Measured rounds then report steady state, which is
             # what an N vs 4N cluster comparison is about.
             s = _fresh_spark(hi_cores)
-            run_pipeline(s, sc_parquet, N_SCALING, None)
+            run_pipeline(s, sc_parquet)
             s.stop()
 
             # interleave levels, alternating order per round
             # ((hi,lo),(lo,hi),...) so residual warming/steal drift hits
-            # both levels symmetrically; keep per-level stage minima for
-            # both wall and executor task time (UI REST)
-            hi_runs: dict[str, int] = {}
-            lo_runs: dict[str, int] = {}
-            hi_task: dict[str, int] = {}
-            lo_task: dict[str, int] = {}
-            round_walls: list[dict] = []  # per-round (lo, hi) stage-sum walls
-            rounds_done = 0
+            # both levels symmetrically
+            rounds: list[dict] = []  # per round: {"lo": run, "hi": run}
             for i in range(SCALING_RUNS):
                 if i > 0 and time.time() - t_all > BUDGET_SEC * 0.65:
-                    break  # keep floors from completed rounds; the
-                    # remaining 35% is the tick benchmark's slot
-                rounds_done += 1
-                rw: dict[str, float] = {}
-                levels = [
-                    ("hi", hi_cores, hi_runs, hi_task),
-                    ("lo", lo_cores, lo_runs, lo_task),
-                ]
-                for level, cores, mins, tmins in (levels if i % 2 == 0 else levels[::-1]):
-                    s = _fresh_spark(cores, ui=True)
-                    r = run_pipeline(s, sc_parquet, N_SCALING, None, task_time=True)
+                    break  # the remaining 35% is the tick benchmark's slot
+                levels = [("hi", hi_cores), ("lo", lo_cores)]
+                rr: dict[str, dict] = {}
+                for level, cores in (levels if i % 2 == 0 else levels[::-1]):
+                    s = _fresh_spark(cores)
+                    rr[level] = run_pipeline(s, sc_parquet)
                     s.stop()
-                    rw[level] = sum(r["stages"].values()) / 1000.0
-                    for k, v in r["stages"].items():
-                        mins[k] = min(mins.get(k, 1 << 60), v)
-                    for k, v in r.get("stage_run_ms", {}).items():
-                        tmins[k] = min(tmins.get(k, 1 << 60), v)
-                round_walls.append(rw)
-            def _metrics(lo_f, hi_f, lo_t, hi_t):
-                """Efficiency + adjusted decomposition from per-stage
-                floors and executor-task-time minima."""
-                ratio = hi_cores / lo_cores
-                wall_lo = sum(lo_f.values()) / 1000.0
-                wall_hi = sum(hi_f.values()) / 1000.0
-                comp_lo = sum(lo_f.get(s, 0) for s in SCALABLE_STAGES) / 1000.0
-                comp_hi = sum(hi_f.get(s, 0) for s in SCALABLE_STAGES) / 1000.0
-                speedup = wall_lo / max(wall_hi, 1e-9)
-                speedup_c = comp_lo / max(comp_hi, 1e-9)
-                out = {
-                    "wall_floor_lo_sec": round(wall_lo, 2),
-                    "wall_floor_hi_sec": round(wall_hi, 2),
-                    "docs_per_sec_lo": round(N_SCALING / wall_lo, 1),
-                    "docs_per_sec_hi": round(N_SCALING / wall_hi, 1),
-                    "speedup": round(speedup, 3),
-                    "efficiency": round(speedup / ratio, 3),
-                    "compute_sec_lo": round(comp_lo, 2),
-                    "compute_sec_hi": round(comp_hi, 2),
-                    "speedup_compute": round(speedup_c, 3),
-                    "efficiency_compute": round(speedup_c / ratio, 3),
-                    "stage_floor_lo": lo_f,
-                    "stage_floor_hi": hi_f,
-                    # executor task-time per stage: at lo this ~equals
-                    # wall (no idle); at hi, run_hi/run_lo is contention
-                    # inflation — separates engine structure from host
-                    "stage_task_ms_lo": lo_t,
-                    "stage_task_ms_hi": hi_t,
-                }
-                # contention-adjusted data-stage efficiency: subtract
-                # the measured task-time inflation (the host's shared-
-                # DRAM/steal tax, reproduced outside Spark by mp.Pool —
-                # BENCH/EVIDENCE.md; a real N->4N executor cluster does
-                # not pay it, each executor owns its DRAM).
-                common = [s for s in SCALABLE_STAGES if s in lo_t and s in hi_t]
-                t_lo = sum(lo_t[s] for s in common) / 1000.0
-                t_hi = sum(hi_t[s] for s in common) / 1000.0
-                w_lo = sum(lo_f[s] for s in common) / 1000.0
-                w_hi = sum(hi_f[s] for s in common) / 1000.0
-                w_hi_adj = max(w_hi - max(t_hi - t_lo, 0.0) / hi_cores, 1e-9)
-                out["adjusted"] = {
-                    "stages": common,
-                    "task_sec_lo": round(t_lo, 2),
-                    "task_sec_hi": round(t_hi, 2),
-                    "inflation": round(t_hi / t_lo, 3) if t_lo else None,
-                    "wall_sec_lo": round(w_lo, 2),
-                    "wall_sec_hi": round(w_hi, 2),
-                    "wall_sec_hi_adjusted": round(w_hi_adj, 2),
-                    "speedup_adjusted": round(w_lo / w_hi_adj, 3),
-                    "efficiency_adjusted": round(w_lo / w_hi_adj / ratio, 3),
-                }
-                return out
-
-            # HEADLINE scaling is a single-invocation statistic (this
-            # invocation's own per-stage floors + the median of its
-            # per-round efficiencies) — repeated invocations cannot
-            # inflate it. The CUMULATIVE floor cache (per-stage minima
-            # merged across invocations of the bit-identical job,
-            # code-fingerprint-gated) is reported alongside as a bound:
-            # it is a consistent estimator of contention-free speed
-            # under additive host steal, but it monotonically improves
-            # with reruns, so it is supplementary, not the headline.
-            ratio = hi_cores / lo_cores
-            this_run = _metrics(lo_runs, hi_runs, lo_task, hi_task)
-            effs = sorted(
-                (rw["lo"] / rw["hi"]) / ratio for rw in round_walls if rw.get("hi")
-            )
-            if effs:
-                m = len(effs) // 2
-                this_run["efficiency_median_round"] = round(
-                    effs[m] if len(effs) % 2 else (effs[m - 1] + effs[m]) / 2, 3
-                )
-                this_run["efficiency_per_round"] = [round(e, 3) for e in effs]
-            this_run["rounds"] = rounds_done
-
-            merged = _merge_floor_cache(lo_runs, hi_runs, lo_task, hi_task, rounds_done)
-            floor_bound = _metrics(merged["lo"], merged["hi"],
-                                   merged["lo_task"], merged["hi_task"])
-            floor_bound.update({
-                "rounds": merged["rounds_total"],
-                "invocations": merged["invocations"],
-                "floors": "cumulative per-stage minima across invocations "
-                          "(code-fingerprint-gated; see BENCH/scaling_floors.json)",
-            })
+                rounds.append(rr)
             scaling = {
                 "cores_lo": lo_cores,
                 "cores_hi": hi_cores,
                 "n_docs": N_SCALING,
-                "this_run": this_run,
-                "floor_bound": floor_bound,
+                "this_run": _scaling_stats(rounds, hi_cores / lo_cores),
             }
 
         # tick benchmark last: its first cycle always runs; extra
@@ -724,51 +415,26 @@ def main() -> None:
 
         total = round(sum(queries.values()) + dedup_hi["wall_sec"], 3)
 
-        # ONE COMPACT JSON LINE on stdout — the driver's graded record.
-        # Rounds 2 and 3 shipped every per-stage dict inline and the
-        # driver failed to parse the line both times (VERDICT r3 What's
-        # wrong #2); all per-stage detail now goes to BENCH/ files.
-        def _slim_scaling(sc) -> dict | None:
-            if sc is None:
-                return None
-            tr, fb = sc["this_run"], sc["floor_bound"]
-            pick = lambda d, ks: {k: d[k] for k in ks if k in d}
-            slim_run = pick(tr, [
-                "rounds", "efficiency", "efficiency_compute",
-                "efficiency_median_round", "efficiency_per_round",
-                "docs_per_sec_lo", "docs_per_sec_hi",
-                "wall_floor_lo_sec", "wall_floor_hi_sec",
-            ])
-            if "adjusted" in tr:
-                slim_run["inflation"] = tr["adjusted"].get("inflation")
-                slim_run["efficiency_adjusted"] = tr["adjusted"].get(
-                    "efficiency_adjusted"
-                )
-            slim_bound = pick(fb, [
-                "rounds", "invocations", "efficiency", "efficiency_compute",
-                "docs_per_sec_lo", "docs_per_sec_hi",
-            ])
-            if "adjusted" in fb:
-                slim_bound["efficiency_adjusted"] = fb["adjusted"].get(
-                    "efficiency_adjusted"
-                )
-            return {
-                "cores_lo": sc["cores_lo"],
-                "cores_hi": sc["cores_hi"],
-                "n_docs": sc["n_docs"],
-                "this_run": slim_run,
-                "floor_bound": slim_bound,
+        # ONE COMPACT JSON LINE on stdout; every per-stage dict goes to
+        # BENCH/bench_detail.json instead (inlined, they made the line
+        # unparseable)
+        slim_scaling = None
+        if scaling is not None:
+            slim_scaling = {
+                "cores_lo": scaling["cores_lo"],
+                "cores_hi": scaling["cores_hi"],
+                "n_docs": scaling["n_docs"],
+                "this_run": {k: v for k, v in scaling["this_run"].items()
+                             if k != "stage_ms_per_round"},
                 "detail": "BENCH/bench_detail.json",
             }
 
         slim_dedup = {
             k: dedup_hi[k]
-            for k in ("n_docs", "wall_sec", "docs_per_sec", "wall_floor_sec",
-                      "docs_per_sec_floor", "recall", "false_merges")
+            for k in ("n_docs", "wall_sec", "docs_per_sec", "recall",
+                      "false_merges", "recall_per_kind")
             if k in dedup_hi
         }
-        if "recall_per_kind" in dedup_hi:
-            slim_dedup["recall_per_kind"] = dedup_hi["recall_per_kind"]
 
         stat1 = _proc_stat_steal()
         steal_pct = (
@@ -798,17 +464,9 @@ def main() -> None:
                     "queries": queries,
                     "sf": SF_DIR.rstrip("/").split("sf")[-1],
                     "dedup": slim_dedup,
-                    "tick": {
-                        k: tick[k]
-                        for k in ("tick_frac", "runs", "headline_n_docs",
-                                  "n_base_docs",
-                                  "frontier_docs", "scratch_wall_sec",
-                                  "tick_wall_sec", "scratch_floor_sec",
-                                  "tick_floor_sec", "tick_docs_per_sec",
-                                  "tick_vs_scratch_ratio", "scratch_speedup",
-                                  "sizes", "growth", "floor_bound")
-                    } if tick else None,
-                    "scaling": _slim_scaling(scaling),
+                    "tick": {k: v for k, v in tick.items()
+                             if not k.startswith("per_stage_")} if tick else None,
+                    "scaling": slim_scaling,
                     "host_steal_pct": steal_pct,
                     "bench_wall_sec": round(time.time() - t_all, 1),
                 }
@@ -821,9 +479,6 @@ def main() -> None:
 def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
     os.makedirs("BENCH", exist_ok=True)
     tr = scaling["this_run"]
-    fb = scaling["floor_bound"]
-    tr_adj = tr.get("adjusted") or {}
-    fb_adj = fb.get("adjusted") or {}
     lines = [
         "# BENCH/BASELINE.md — measured numbers (this engine)",
         "",
@@ -832,8 +487,8 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
         "",
         "## End-to-end dedup pipeline (exact + MinHash/LSH + verify + CC + substr)",
         "",
-        f"- wall: {dedup['wall_sec']} s → **{dedup['docs_per_sec']} docs/sec** at {CPUS} cores "
-        f"(stage-floor composition: {dedup['docs_per_sec_floor']} docs/sec)",
+        f"- wall: {dedup['wall_sec']} s → **{dedup['docs_per_sec']} docs/sec** "
+        f"at {dedup['cores']} cores (fastest of {BENCH_RUNS} runs)",
         f"- dup-pair recall {dedup.get('recall', 'n/a')} (exact/near/template all classes), "
         f"{dedup.get('false_merges', 'n/a')} false merges",
         "",
@@ -849,14 +504,14 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
         "per-stage latency (~25 s of job scheduling/commit plumbing,",
         "paid equally by scratch and tick at small corpora) from the",
         "property the benchmark exists to show: tick wall is bound by",
-        "the FRONTIER, scratch wall by the CORPUS. Headline = the",
+        "the FRONTIER, scratch wall by the CORPUS. Each size reports its",
+        "fastest cycle. Headline = the",
         f"larger size ({tick['headline_n_docs']} docs — the operating "
         "model is standing corpus >> tick):",
         "",
-        f"- from-scratch ({tick['n_base_docs']} valid base docs): "
-        f"{tick['scratch_wall_sec']} s (floor {tick['scratch_floor_sec']} s)",
-        f"- tick (+{tick['frontier_docs']} docs): **{tick['tick_wall_sec']} s** "
-        f"(floor {tick['tick_floor_sec']} s) → "
+        f"- from-scratch ({tick['n_base_docs']} base docs): "
+        f"{tick['scratch_wall_sec']} s",
+        f"- tick (+{tick['frontier_docs']} docs): **{tick['tick_wall_sec']} s** → "
         f"{tick['tick_docs_per_sec']} frontier docs/sec",
         f"- tick / from-scratch wall ratio **{tick['tick_vs_scratch_ratio']}** "
         f"(speedup {tick['scratch_speedup']}x); every stage takes its",
@@ -864,20 +519,11 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
         "  buckets, delta dup_report) — per-stage split in",
         "  BENCH/bench_detail.json `tick`.",
     ] + ([
-        f"- cross-invocation floor bound (same statistic as the scaling floors: "
-        f"per-stage minima over {tick['floor_bound']['cycles_total']} cycles / "
-        f"{tick['floor_bound']['invocations']} invocations, fingerprint-gated, "
-        f"BENCH/tick_floors.json): from-scratch "
-        f"{tick['floor_bound']['scratch_floor_sec']} s vs tick "
-        f"{tick['floor_bound']['tick_floor_sec']} s → speedup "
-        f"**{tick['floor_bound']['scratch_speedup']}x**.",
-    ] if tick.get("floor_bound") else []) + ([
         "",
         "### Frontier-proportionality (the 10^12-doc argument)",
         "",
         f"Corpus grown **{tick['growth']['corpus_growth']}x** "
-        f"({ ' vs '.join(str(n) for n in sorted(tick['sizes'])) } docs, "
-        "cross-invocation floor bounds at each size):",
+        f"({ ' vs '.join(str(n) for n in sorted(tick['sizes'])) } docs):",
         "",
         f"- from-scratch wall grew **{tick['growth']['scratch_wall_growth']}x** "
         "(corpus-bound, as designed)",
@@ -895,11 +541,11 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
     ] if tick.get("growth") else [""]) if tick else []) + [
         "## Cluster-size scaling evidence (north rule: N vs 4N)",
         "",
-        "A real multi-executor cluster is unavailable in this sandbox; per the",
-        "driver's instruction the same job ran at two local parallelism levels",
+        "A real multi-executor cluster is unavailable in this sandbox; the",
+        "same job ran at two local parallelism levels",
         "on the same input — local[%d] vs local[%d], %d interleaved" % (
-            scaling["cores_lo"], scaling["cores_hi"], tr.get("rounds", SCALING_RUNS)),
-        "fresh-session rounds per level in THIS invocation (one untimed",
+            scaling["cores_lo"], scaling["cores_hi"], tr["rounds"]),
+        "fresh-session rounds per level (one untimed",
         "warm-up run first — page cache + shared-JVM JIT — with per-round",
         "level order alternating, so rounds measure steady state",
         "symmetrically). Host calibration",
@@ -911,46 +557,18 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
         "the engine. On a real N→4N executor cluster each executor brings its",
         "own DRAM and cores.",
         "",
-        "### Headline (this invocation alone — repeated runs cannot inflate it)",
+        "| parallelism | median wall (s) | docs/sec |",
+        "|---|---|---|",
+        f"| local[{scaling['cores_lo']}] | {tr['wall_lo_sec']} | {tr['docs_per_sec_lo']} |",
+        f"| local[{scaling['cores_hi']}] | {tr['wall_hi_sec']} | {tr['docs_per_sec_hi']} |",
         "",
-        "| parallelism | pipeline floor (s) | docs/sec | data-scaling stages only (s) |",
-        "|---|---|---|---|",
-        f"| local[{scaling['cores_lo']}] | {tr['wall_floor_lo_sec']} | {tr['docs_per_sec_lo']} | {tr['compute_sec_lo']} |",
-        f"| local[{scaling['cores_hi']}] | {tr['wall_floor_hi_sec']} | {tr['docs_per_sec_hi']} | {tr['compute_sec_hi']} |",
-        "",
-        f"overall: speedup {tr['speedup']}x / **efficiency {tr['efficiency']}** · "
-        f"data-scaling stages: speedup {tr['speedup_compute']}x / **efficiency {tr['efficiency_compute']}** "
-        f"over a {scaling['cores_hi'] // scaling['cores_lo']}x core increase.",
-        f"Median of per-round efficiencies: **{tr.get('efficiency_median_round', 'n/a')}** "
-        f"(per round: {tr.get('efficiency_per_round', [])}).",
-    ] + ([
-        f"Task-time inflation this invocation {tr_adj['inflation']}x "
-        f"(hi-level host-contention tax, measured from executor task time); "
-        f"inflation-adjusted data-stage efficiency **{tr_adj['efficiency_adjusted']}** "
-        "— the adjustment subtracts only the measured contention a real N→4N",
-        "executor cluster does not pay (each executor owns its DRAM; the tax is",
-        "reproduced outside Spark by mp.Pool on the same kernels, BENCH/EVIDENCE.md).",
-    ] if tr_adj else []) + [
-        "",
-        "### Supplementary bound: cumulative per-stage floors",
-        "",
-        f"Per-stage minima merged across {fb['invocations']} invocation(s) / "
-        f"{fb['rounds']} total rounds of the bit-identical job (code-fingerprint-",
-        "gated, BENCH/scaling_floors.json). Host steal is additive noise, so the",
-        "cumulative floor is a consistent estimator of contention-free speed — but",
-        "it monotonically improves with every rerun, so it is a BOUND, not the",
-        "headline:",
-        "",
-        f"- overall efficiency {fb['efficiency']} · data-stages {fb['efficiency_compute']}"
-        + (f" · adjusted {fb_adj['efficiency_adjusted']}" if fb_adj else ""),
-        f"- lo {fb['wall_floor_lo_sec']} s ({fb['docs_per_sec_lo']} docs/s) vs "
-        f"hi {fb['wall_floor_hi_sec']} s ({fb['docs_per_sec_hi']} docs/s)",
-        "",
-        "Fixed costs and host contention are separately accounted via executor",
-        "task time (stage_task_ms_lo/hi in BENCH/bench_detail.json): at the lo",
-        "level task time ~= wall (no idle slots); at the hi level each stage",
-        "decomposes into task-time inflation (host contention) and scheduling",
-        "slack (wall - task/cores).",
+        f"Median-round efficiency **{tr['efficiency']}** "
+        f"(per round: {tr['efficiency_per_round']}); data-scaling stages only: "
+        f"**{tr['efficiency_compute']}**, over a "
+        f"{scaling['cores_hi'] // scaling['cores_lo']}x core increase.",
+        "Per-stage walls of every run are in BENCH/bench_detail.json",
+        "`scaling.this_run.stage_ms_per_round`; per-stage task time, job",
+        "counts and driver gaps come from `perfbench/run.py --trace 1`.",
         "",
         "The engine-side structural properties that make the same plan",
         "scale on a real cluster (no O(n^2) hot keys, no driver-side data",
@@ -962,10 +580,10 @@ def _write_baseline_md(queries, dedup, scaling, tick=None) -> None:
         "",
         "## Headline query times (sf dir: %s)" % SF_DIR,
         "",
-        f"Best-of-{HEADLINE_RUNS} floors (fresh session per pass; the full",
+        f"Best-of-{HEADLINE_RUNS} per query (fresh session per pass; the full",
         "min/max spread per query is in BENCH/bench_detail.json).",
         "",
-        "| query | floor sec |",
+        "| query | best sec |",
         "|---|---|",
     ]
     for k, v in queries.items():

@@ -28,7 +28,8 @@ def main() -> None:
     ap.add_argument("--queries", default=None, help="comma list; default = bench HEADLINE")
     ap.add_argument("--plans", default=None, help="dir for explain dumps (skip if unset)")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="default: the session factory's (SPARK_GRAFT_CPUS or all cores)")
     args = ap.parse_args()
 
     import __spark_entry__ as E

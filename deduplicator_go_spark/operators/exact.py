@@ -7,8 +7,9 @@ Reference parity (SURVEY.md §2):
 - dup-group agg A2 + rejoin J1 (files/utils.go:67-108, files/move.go:57-90)
 - member assembly A8 (files/utils.go:118-151) via collect_list, not
   client-side run-length grouping
-- keeper elections W1/W2/W3 (files/dedupe.go:168-181, files/move.go:226-246,
-  files/group_dedup.go:263-289) as row_number windows
+- keeper elections W2/W3 (files/move.go:226-246,
+  files/group_dedup.go:263-289) as row_number windows; the legacy
+  dir-count keeper W1 (files/dedupe.go:168-181) is not reproduced
 - top-N by total size W4/O1 (files/utils.go:89-95)
 - savings A4 (files/utils.go:181-188)
 
@@ -111,22 +112,6 @@ def elect_keeper_lexicographic(members: DataFrame) -> DataFrame:
     w = Window.partitionBy("content_sha", "size").orderBy("url")
     return members.withColumn("rank", F.row_number().over(w)).withColumn(
         "is_keeper", F.col("rank") == 1
-    )
-
-
-def elect_keeper_dir_count(members: DataFrame) -> DataFrame:
-    """W1: legacy keeper = member whose parent 'directory' (here: url
-    prefix up to the last path segment) holds the most cataloged rows
-    (files/dedupe.go:168-181 keeps the most-populated parent dir)."""
-    with_dir = members.withColumn("parent_dir", F.expr("substring_index(url, '/', 4)"))
-    dir_counts = with_dir.groupBy("parent_dir").agg(F.count("*").alias("dir_count"))
-    w = Window.partitionBy("content_sha", "size").orderBy(
-        F.desc("dir_count"), F.asc("url")
-    )
-    return (
-        with_dir.join(F.broadcast(dir_counts), "parent_dir")
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("is_keeper", F.col("rank") == 1)
     )
 
 

@@ -136,36 +136,24 @@ class DedupPipeline:
                extra_deps: dict | None = None,
                partition_by: list[str] | None = None,
                release: bool = True) -> StageResult:
+        """Run one stage unless its commit already covers the current
+        upstream. ``mode="append"`` is the frontier-driven form: re-invoked
+        on a grown upstream it appends only the frontier's rows, reusing
+        partial output from a killed run when params match (wiped
+        otherwise by ``incremental_begin``)."""
         up = self._deps_fingerprint(deps, extra_deps)
         if self.catalog.is_complete(name, self.ph, upstream_rows=up):
             info = self.catalog.commit_info(name)
             return StageResult(name, skipped=True, rows=info.rows, wall_ms=0)
         t0 = time.time()
+        if mode == "append":
+            self.catalog.incremental_begin(name, self.ph)
         df = build()
         info = self.catalog.write(df, name, self.ph, mode=mode,
                                   partition_by=partition_by, upstream_rows=up)
         if release:
             self._release_persisted()
         return StageResult(name, skipped=False, rows=info.rows, wall_ms=int((time.time() - t0) * 1000))
-
-    def _incremental_stage(self, name: str, build,
-                           deps: list[str] | None = None,
-                           extra_deps: dict | None = None) -> StageResult:
-        """Append-mode stage: frontier-driven — re-invoked on a grown
-        upstream it appends only the frontier's rows; reuses partial
-        output from a killed run when params match (wiped otherwise).
-        Routed through its own runner so external instrumentation can
-        wrap stage boundaries uniformly with _stage."""
-        up = self._deps_fingerprint(deps, extra_deps)
-        if self.catalog.is_complete(name, self.ph, upstream_rows=up):
-            info = self.catalog.commit_info(name)
-            return StageResult(name, skipped=True, rows=info.rows, wall_ms=0)
-        t0 = time.time()
-        self.catalog.incremental_begin(name, self.ph)
-        df = build()
-        info = self.catalog.write(df, name, self.ph, mode="append", upstream_rows=up)
-        self._release_persisted()
-        return StageResult(name, False, info.rows, int((time.time() - t0) * 1000))
 
     def _read(self, name: str) -> DataFrame:
         return self.catalog.read(self.spark, name)
@@ -391,8 +379,8 @@ class DedupPipeline:
             return exact.valid_documents(frontier, c.min_text_chars, c.langs).select(*cols)
 
         report.stages.append(
-            self._incremental_stage(
-                "valid_docs", build_valid,
+            self._stage(
+                "valid_docs", build_valid, mode="append",
                 extra_deps={"input_rows": input_rows, "input_urlsig": input_urlsig},
             )
         )
@@ -407,8 +395,8 @@ class DedupPipeline:
                     frontier = frontier.join(done, "url", "left_anti")
             return exact.with_signature(frontier)
 
-        sig_stage = self._incremental_stage(
-            "exact_sigs", build_exact_sigs, deps=["valid_docs"]
+        sig_stage = self._stage(
+            "exact_sigs", build_exact_sigs, mode="append", deps=["valid_docs"]
         )
         report.stages.append(sig_stage)
         if not sig_stage.skipped:
@@ -440,8 +428,8 @@ class DedupPipeline:
                 )
             return edges
 
-        edge_stage = self._incremental_stage(
-            "exact_edges", build_exact_edges, deps=["exact_sigs"]
+        edge_stage = self._stage(
+            "exact_edges", build_exact_edges, mode="append", deps=["exact_sigs"]
         )
         report.stages.append(edge_stage)
         if not edge_stage.skipped:
@@ -482,8 +470,8 @@ class DedupPipeline:
                 "sig16": packed_sig16(c.num_perm),
             })
 
-        mh_stage = self._incremental_stage(
-            "minhash_sigs", build_minhash, deps=["valid_docs"]
+        mh_stage = self._stage(
+            "minhash_sigs", build_minhash, mode="append", deps=["valid_docs"]
         )
         report.stages.append(mh_stage)
         if not mh_stage.skipped:
@@ -501,8 +489,8 @@ class DedupPipeline:
                     sigs = sigs.join(done, "url", "left_anti")
             return band_table(sigs, c.lsh_bands, c.lsh_rows)
 
-        band_stage = self._incremental_stage(
-            "band_rows", build_band_rows, deps=["minhash_sigs"]
+        band_stage = self._stage(
+            "band_rows", build_band_rows, mode="append", deps=["minhash_sigs"]
         )
         report.stages.append(band_stage)
         if not band_stage.skipped:
@@ -543,8 +531,8 @@ class DedupPipeline:
                 "band_rows", bands, cand_seen, "candidates"
             )
 
-        cand_stage = self._incremental_stage(
-            "candidates", build_candidates, deps=["band_rows"]
+        cand_stage = self._stage(
+            "candidates", build_candidates, mode="append", deps=["band_rows"]
         )
         report.stages.append(cand_stage)
         if not cand_stage.skipped:
@@ -579,8 +567,8 @@ class DedupPipeline:
                 prune_endpoints=on_tick,
             )
 
-        ver_stage = self._incremental_stage(
-            "verified_pairs", build_verified, deps=["candidates"]
+        ver_stage = self._stage(
+            "verified_pairs", build_verified, mode="append", deps=["candidates"]
         )
         report.stages.append(ver_stage)
         if not ver_stage.skipped:
@@ -603,8 +591,8 @@ class DedupPipeline:
                 frontier = frontier.filter(F.length("text") >= c.substr_min_len)
                 return anchor_table(frontier, c.substr_anchor_k, c.substr_anchor_mod)
 
-            anchor_stage = self._incremental_stage(
-                "anchor_rows", build_anchor_rows, deps=["valid_docs"]
+            anchor_stage = self._stage(
+                "anchor_rows", build_anchor_rows, mode="append", deps=["valid_docs"]
             )
             report.stages.append(anchor_stage)
             if not anchor_stage.skipped:
@@ -663,8 +651,8 @@ class DedupPipeline:
                     "has_block"
                 )
 
-            substr_stage = self._incremental_stage(
-                "substr_pairs", build_substr,
+            substr_stage = self._stage(
+                "substr_pairs", build_substr, mode="append",
                 deps=["anchor_rows", "verified_pairs"],
             )
             report.stages.append(substr_stage)
