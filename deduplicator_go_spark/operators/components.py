@@ -22,18 +22,31 @@ deterministic, the W2 keeper rule at cluster scope
 Scale notes: each round is two shuffles on node id; ``localCheckpoint``
 truncates lineage every round so plans don't grow; convergence is
 detected with a one-pass count+checksum aggregate, not exceptAll.
+
+Small graphs skip the round loop: at most ``LOCAL_MAX_EDGES`` edges
+are collected and labelled by a union-find in the driver, with one
+collect and no session-conf swap. A tick's affected graph is a few
+hundred edges, where the rounds' ~14 jobs were pure per-job latency.
+The distributed loop stays for larger graphs, because it is the only
+path that runs on a graph too big for the driver's memory.
 """
 
 from __future__ import annotations
 
 import threading
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # serializes the shuffle-partition set/restore across concurrent
 # pipelines sharing one SparkSession (see connected_components)
 _CC_CONF_LOCK = threading.RLock()
+
+# edge-count bound of the in-driver path: the union-find labels 200k
+# edges between 150k url-sized ids in ~0.7 s of driver CPU
+LOCAL_MAX_EDGES = 200_000
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -88,9 +101,39 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return row["n"], row["h"]
 
 
+def _local_components(edges: DataFrame) -> DataFrame:
+    """Union-find over the collected edges; each component's root is its
+    minimum id, the label the star rounds converge to. The id column
+    keeps the edges' type."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for src, dst in edges.collect():
+        a, b = find(src), find(dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    id_type = edges.schema["src"].dataType
+    # an Arrow table is handed to the JVM as Arrow batches; a list of
+    # tuples would become a Python RDD whose every scan starts
+    # pyspark.daemon workers (~300 MB of extra driver-host RSS)
+    labels = pa.table({"url": list(parent), "cluster_id": [find(x) for x in parent]})
+    return edges.sparkSession.createDataFrame(
+        labels,
+        StructType([StructField("url", id_type), StructField("cluster_id", id_type)]),
+    )
+
+
 def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     """edges(src, dst) → assignments(url, cluster_id); singletons absent
-    (callers left-join and coalesce to self-label).
+    (callers left-join and coalesce to self-label). Graphs of at most
+    ``LOCAL_MAX_EDGES`` distinct edges are labelled in the driver
+    (``_local_components``); larger ones by the star rounds below.
 
     Shuffle sizing: each round is several tiny shuffles; with the
     session's byte-based AQE coalescing off (see session.py), running
@@ -116,6 +159,8 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     # as the round loop below
     cur = cur.localCheckpoint(eager=False)
     n0, _ = _fingerprint(cur)
+    if n0 <= LOCAL_MAX_EDGES:
+        return _local_components(cur)
     global_parts = int(sess.conf.get("spark.sql.shuffle.partitions"))
     global_aqe = sess.conf.get("spark.sql.adaptive.enabled")
     cc_parts = max(4, min(global_parts, n0 // 50_000 + 1))

@@ -38,21 +38,24 @@ def band_hash_array(bands: int, rows: int, sig_col: str = "sig"):
     """array<bigint> column of per-band hashes over a signature column.
 
     band_hash = xxhash64 over the band's r signature components plus
-    the band id — extracted with element_at rather than hashing an
-    F.slice() value: the slice form allocates a fresh array per
-    (row, band) (bands x corpus temporary arrays), which measurably
-    inflated task time under concurrency; element_at extraction stays
-    allocation-free inside codegen.
+    the band id (an INT literal) — extracted with element_at rather
+    than hashing a slice() value: the slice form allocates a fresh
+    array per (row, band) (bands x corpus temporary arrays), which
+    measurably inflated task time under concurrency; element_at
+    extraction stays allocation-free inside codegen.
+
+    Built as ONE SQL expression string: the same tree assembled from
+    Column calls costs a py4j round-trip per node (~320 for the default
+    32x4 banding; with minhash.packed_sig16, ~1.4 s of driver time per
+    pipeline run in a warm JVM).
     """
-    return F.array(
-        *[
-            F.xxhash64(
-                *[F.element_at(F.col(sig_col), b * rows + i + 1) for i in range(rows)],
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
+    hashes = (
+        "xxhash64("
+        + ", ".join(f"element_at(`{sig_col}`, {b * rows + i + 1})" for i in range(rows))
+        + f", {b})"
+        for b in range(bands)
     )
+    return F.expr(f"array({', '.join(hashes)})")
 
 
 def band_table(sigs: DataFrame, bands: int, rows: int) -> DataFrame:

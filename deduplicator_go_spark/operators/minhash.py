@@ -278,20 +278,17 @@ def packed_sig16(num_perm: int, sig_col: str = "sig"):
     """
     assert num_perm % 4 == 0
 
-    def lane(idx: int):  # 1-based element_at position
-        return F.xxhash64(F.element_at(F.col(sig_col), idx)).bitwiseAND(
-            F.lit(0xFFFF)
-        )
+    def lane(idx: int) -> str:  # 1-based element_at position
+        return f"(xxhash64(element_at(`{sig_col}`, {idx})) & 65535)"
 
-    return F.array(
-        *[
-            F.shiftleft(lane(4 * i + 1), 48)
-            .bitwiseOR(F.shiftleft(lane(4 * i + 2), 32))
-            .bitwiseOR(F.shiftleft(lane(4 * i + 3), 16))
-            .bitwiseOR(lane(4 * i + 4))
-            for i in range(num_perm // 4)
-        ]
+    # one SQL expression string, like lsh.band_hash_array: the Column
+    # form is ~830 py4j calls for num_perm=128
+    packed = (
+        f"(shiftleft({lane(4 * i + 1)}, 48) | shiftleft({lane(4 * i + 2)}, 32)"
+        f" | shiftleft({lane(4 * i + 3)}, 16) | {lane(4 * i + 4)})"
+        for i in range(num_perm // 4)
     )
+    return F.expr(f"array({', '.join(packed)})")
 
 
 def estimated_jaccard_packed(sig_a, sig_b, num_perm: int):

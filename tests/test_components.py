@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
+from deduplicator_go_spark.operators import components
 from deduplicator_go_spark.operators.components import assign_all, connected_components
 
 
@@ -27,12 +30,24 @@ def _uf_oracle(edges):
     return {x: find(x) for x in parent}
 
 
+def _both_paths(edges_df):
+    """connected_components on the in-driver path, then with the edge
+    bound at 0, which forces the distributed star rounds."""
+    local = connected_components(edges_df)
+    # the path is chosen inside the call, from the measured edge count
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "LOCAL_MAX_EDGES", 0)
+        distributed = connected_components(edges_df)
+    return local, distributed
+
+
 def _check(spark, edges):
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["url"]: r["cluster_id"] for r in connected_components(df).collect()}
     want = _uf_oracle(edges)
-    # same partition AND same canonical min-label
-    assert got == want
+    for out in _both_paths(df):
+        got = {r["url"]: r["cluster_id"] for r in out.collect()}
+        # same partition AND same canonical min-label
+        assert got == want
 
 
 def test_cc_simple_chain(spark):
@@ -69,3 +84,14 @@ def test_assign_all_singletons(spark):
     labels = {r["url"]: r["cluster_id"] for r in
               assign_all(docs, connected_components(edges)).collect()}
     assert labels == {"a": "a", "b": "a", "c": "c"}
+
+
+def test_cc_long_ids_keep_type(spark):
+    """Long ids (the cluster_labels query passes doc ids) come back as
+    longs on both paths, labelled with the numeric component minimum."""
+    edges = [(10, 2), (2, 33), (7, 100), (100, 9), (9, 7), (5, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    want = _uf_oracle([(a, b) for a, b in edges if a != b])
+    for out in _both_paths(df):
+        assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
+        assert {r["url"]: r["cluster_id"] for r in out.collect()} == want

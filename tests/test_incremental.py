@@ -157,3 +157,110 @@ def test_read_cache_invalidates_on_data_change(spark, tmp_path):
 
     cat.drop("t")
     assert cat._read_cache.get("t") is None
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-read", "catalog-read")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup("catalog-read"))
+        out = fn()
+        after = set(sc.statusTracker().getJobIdsForGroup("catalog-read"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(after - before)
+
+
+def test_committed_schema_reads_start_no_job(spark, tmp_path):
+    """read and appended_since resolve a committed table from the
+    schema in its commit marker: no footer (inference) job and no
+    partition-listing job, on a plain append table and on a
+    pbucket-partitioned cow table with more bucket directories than
+    Spark's default parallel-listing threshold. Rows and schema equal
+    an inferring read."""
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    ids = spark.range(300)
+    cat.write(ids.select(F.col("id").cast("string").alias("url"), "id"),
+              "plain", params_hash="p", mode="append")
+    cat.write(ids.select(F.concat(F.lit("v"), F.col("id")).alias("url"), "id"),
+              "plain", params_hash="p", mode="append")
+    part = ids.select(
+        F.col("id").cast("string").alias("url"),
+        (F.col("id") % 7).alias("cluster_id"),
+        F.pmod(F.xxhash64("id"), F.lit(64)).cast("int").alias("pbucket"),
+    )
+    cat.write(part.repartition("pbucket"), "part", params_hash="p",
+              partition_by=["pbucket"])
+    # the cow DataFrame carries the full new content of the buckets it
+    # touches; the other buckets' files carry forward
+    cat.write(part.filter("pbucket < 10").withColumn("cluster_id", F.lit(0).cast("long")),
+              "part", params_hash="p", mode="cow", partition_by=["pbucket"])
+
+    for name, n in (("plain", 600), ("part", 300)):
+        inferred = spark.read.parquet(cat.table_path(name))
+        got, jobs = _jobs_started(spark, lambda: cat.read(spark, name))
+        assert jobs == 0, name
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
+        assert got.count() == n
+        new, jobs = _jobs_started(
+            spark, lambda: cat.appended_since(spark, name, cat.current_files(name)[:1])
+        )
+        assert jobs == 0, name
+        assert new.schema == inferred.schema
+
+
+def test_marker_without_schema_reads_by_inference(spark, tmp_path):
+    """A commit marker written before CommitInfo.schema existed (an old
+    catalog) still reads, through schema inference."""
+    import json
+
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    cat.write(spark.createDataFrame([("u1", 1), ("u2", 2)], "url string, n long"),
+              "t", params_hash="p")
+    marker = cat._marker("t")
+    with open(marker) as f:
+        info = json.load(f)
+    del info["schema"]
+    with open(marker, "w") as f:
+        json.dump(info, f)
+    assert cat.commit_info("t").schema is None
+    got = cat.read(spark, "t")
+    assert got.columns == ["url", "n"]
+    assert sorted(got.collect()) == [("u1", 1), ("u2", 2)]
+
+
+def test_append_with_mismatched_schema_raises(spark, tmp_path):
+    """An append or cow write whose column names or types differ from
+    the committed schema raises instead of leaving a mixed-schema
+    directory whose rows read back as NULLs. Column order and
+    nullability do not count: parquet reads by name."""
+    import pytest
+
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    cat.write(spark.createDataFrame([("u1", 1)], "url string, n long"),
+              "t", params_hash="p", mode="append")
+    for bad in ("url string, n int", "url string, m long",
+                "url string, n long, extra string"):
+        row = ("u2", 2, "x")[: len(bad.split(","))]
+        with pytest.raises(ValueError, match="committed schema"):
+            cat.write(spark.createDataFrame([row], bad), "t",
+                      params_hash="p", mode="append")
+    # reordered, non-nullable columns are the same table schema
+    same = spark.createDataFrame([(3, "u3")], "n long not null, url string")
+    cat.write(same, "t", params_hash="p", mode="append")
+    assert sorted((r.url, r.n) for r in cat.read(spark, "t").collect()) == [
+        ("u1", 1), ("u3", 3)
+    ]
+
+    cat.write(spark.createDataFrame([("u1", 1, 0)], "url string, n long, b int"),
+              "c", params_hash="p", partition_by=["b"])
+    with pytest.raises(ValueError, match="committed schema"):
+        cat.write(spark.createDataFrame([("u1", "1", 0)], "url string, n string, b int"),
+                  "c", params_hash="p", mode="cow", partition_by=["b"])
+    # an overwrite may change the schema
+    cat.write(spark.createDataFrame([("u1", "1")], "url string, n string"),
+              "c", params_hash="p")
+    assert cat.read(spark, "c").columns == ["url", "n"]

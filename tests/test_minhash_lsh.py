@@ -262,3 +262,50 @@ def test_pipeline_schema_version_gates_catalog_reuse(spark, tmp_path, monkeypatc
     monkeypatch.setattr(P, "TABLE_SCHEMA_VERSION", P.TABLE_SCHEMA_VERSION + 1)
     p3 = P.DedupPipeline(spark, CheckpointCatalog(str(tmp_path / "ck")), c)
     assert p3.ph != p1.ph  # schema bump → incremental_begin wipes
+
+
+def test_hash_arrays_bit_identical_to_column_form(spark):
+    """band_hash_array and packed_sig16 are single SQL expressions; their
+    values must equal, bit for bit, the same hashes built per element
+    with the Column API (INT band-id and mask literals), so committed
+    catalogs stay valid."""
+    from deduplicator_go_spark.operators.lsh import band_hash_array
+    from deduplicator_go_spark.operators.minhash import packed_sig16
+
+    def bands_ref(bands, rows, col):
+        return F.array(*[
+            F.xxhash64(*[F.element_at(F.col(col), b * rows + i + 1) for i in range(rows)],
+                       F.lit(b))
+            for b in range(bands)
+        ])
+
+    def sig16_ref(num_perm, col):
+        def lane(idx):
+            return F.xxhash64(F.element_at(F.col(col), idx)).bitwiseAND(F.lit(0xFFFF))
+
+        return F.array(*[
+            F.shiftleft(lane(4 * i + 1), 48)
+            .bitwiseOR(F.shiftleft(lane(4 * i + 2), 32))
+            .bitwiseOR(F.shiftleft(lane(4 * i + 3), 16))
+            .bitwiseOR(lane(4 * i + 4))
+            for i in range(num_perm // 4)
+        ])
+
+    rng = np.random.default_rng(5)
+    sigs = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max,
+                        size=(64, C.num_perm), dtype=np.int64, endpoint=True)
+    sigs[0, :4] = [np.iinfo(np.int64).min, -1, 0, np.iinfo(np.int64).max]
+    df = spark.createDataFrame(
+        [(i, [int(v) for v in row]) for i, row in enumerate(sigs)],
+        "id int, sig array<bigint>",
+    )
+    # a column name that needs quoting inside the SQL string
+    for bands, rows, col in ((C.lsh_bands, C.lsh_rows, "sig"), (16, 8, "sig"),
+                             (C.lsh_bands, C.lsh_rows, "s ig")):
+        src = df if col == "sig" else df.withColumnRenamed("sig", col)
+        out = src.select(
+            (band_hash_array(bands, rows, col) == bands_ref(bands, rows, col)).alias("b"),
+            (packed_sig16(C.num_perm, col) == sig16_ref(C.num_perm, col)).alias("p"),
+            F.size(band_hash_array(bands, rows, col)).alias("nb"),
+        ).collect()
+        assert all(r.b and r.p and r.nb == bands for r in out)
