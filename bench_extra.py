@@ -1,16 +1,16 @@
-"""Per-query measurement harness for optimization work (bench.py is
-frozen for the graded record; this file exists for guide §1.4-style
-isolation runs and plan capture — cite its numbers in
-OPTIMIZATION_r06.md).
+"""Per-query timing and plan capture for optimization work.
 
 Usage:
   python bench_extra.py [--sf DIR] [--runs N] [--queries a,b,c]
                         [--plans plans/r06] [--tag before]
 
-For each named query: fresh bench-identical session per pass, time
-`.collect()` (the frozen bench's methodology), keep the per-query
-floor (min across passes), and dump `.explain("formatted")` to
-<plans>/<query>_<tag>.txt on the first pass.
+Runs the named queries (default: bench.py's HEADLINE set) for N passes,
+each pass in a fresh bench-identical session. Each query is timed as
+build plus `.collect()`, the way bench.py times it, and on the first
+pass its `.explain("formatted")` plan is written to
+<plans>/<query>_<tag>.txt. The last line is JSON with each query's
+samples, best of N and median; no figure is combined across queries
+or carried across invocations.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import time
 
 
@@ -36,18 +37,15 @@ def main() -> None:
     from bench import HEADLINE, _fresh_spark
 
     names = args.queries.split(",") if args.queries else HEADLINE
-    mins: dict[str, float] = {}
     samples: dict[str, list[float]] = {n: [] for n in names}
     for p in range(args.runs):
         spark = _fresh_spark(args.cpus)
         qs = E.queries()
         for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-            # time build+collect together — the frozen bench.py does
-            # `qs[name](spark, SF_DIR).collect()` inside its timer, so
-            # any eager work at DataFrame-build time (localCheckpoint
-            # materialization, first() probes) counts toward the graded
-            # number and must count here too
+            # time build+collect together, as bench.py does: eager work
+            # at DataFrame-build time (localCheckpoint materialization,
+            # first() probes) is part of the query's cost
             t0 = time.time()
             df = qs[name](spark, args.sf)
             df.collect()
@@ -60,11 +58,14 @@ def main() -> None:
                 with open(os.path.join(args.plans, f"{name}_{args.tag}.txt"), "w") as f:
                     f.write(plan)
             samples[name].append(dt)
-            mins[name] = min(mins.get(name, 1e18), dt)
             print(f"  pass {p} {name}: {dt}s", flush=True)
         spark.stop()
-    print(json.dumps({"sf": args.sf, "floors": mins, "samples": samples,
-                      "total_floor": round(sum(mins.values()), 3)}))
+    print(json.dumps({
+        "sf": args.sf,
+        "samples": samples,
+        "best": {n: min(v) for n, v in samples.items()},
+        "median": {n: round(statistics.median(v), 3) for n, v in samples.items()},
+    }))
 
 
 if __name__ == "__main__":

@@ -61,8 +61,23 @@ class DedupConfig:
     substr_anchor_mod: int = 32
 
     def __post_init__(self) -> None:
+        for name in ("shingle_size", "num_perm", "substr_anchor_k",
+                     "substr_anchor_mod", "cluster_buckets", "cc_max_iters"):
+            if getattr(self, name) <= 0:
+                raise ValueError(f"{name} must be positive, got {getattr(self, name)}")
         if self.lsh_bands * self.lsh_rows != self.num_perm:
             raise ValueError("lsh_bands * lsh_rows must equal num_perm")
+        if not 0 < self.verify_threshold <= 1:
+            raise ValueError(
+                f"verify_threshold must be in (0, 1], got {self.verify_threshold}"
+            )
+        # a shared block shorter than the anchor gram holds no anchor, so
+        # its pair would never become a candidate: recall lost silently
+        if self.substr_min_len < self.substr_anchor_k:
+            raise ValueError(
+                f"substr_min_len ({self.substr_min_len}) must be >= "
+                f"substr_anchor_k ({self.substr_anchor_k})"
+            )
 
     def params_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True, default=str)

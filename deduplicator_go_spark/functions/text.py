@@ -4,8 +4,8 @@
 Covers the scalar-function surface of the reference (SURVEY.md §2.8:
 sha-256 content hash files/files.go:119-155, case folding, coalesce
 defaults, LIKE containment) plus the text-analysis operators a
-training-data pipeline needs: extraction, language ID, quality
-scoring, token counting, fingerprinting.
+training-data pipeline needs: extraction, quality features and
+filter flags, token counting, fingerprinting.
 """
 
 from __future__ import annotations
@@ -73,34 +73,7 @@ def bpe_ish_token_count(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# language ID (n-gram/stopword heuristic) — pure column algebra
-# ---------------------------------------------------------------------------
-
-_LANG_STOPWORDS = {
-    "en": r"\b(the|and|of|to|in|is|that|for|with|was)\b",
-    "de": r"\b(der|die|das|und|ist|nicht|mit|ein|eine|zu)\b",
-    "fr": r"\b(le|la|les|et|est|pas|pour|que|une|des)\b",
-    "es": r"\b(el|la|los|las|y|es|que|de|un|una)\b",
-}
-
-
-def _stopword_hits(text: Column, lang: str) -> Column:
-    return F.size(F.regexp_extract_all(F.lower(text), F.lit(_LANG_STOPWORDS[lang]), 0))
-
-
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID: argmax of stopword hit counts, 'unk' when
-    nothing matches. Returns a string column."""
-    scored = F.array(
-        *[F.struct(_stopword_hits(text, lg).alias("hits"), F.lit(lg).alias("lang"))
-          for lg in _LANG_STOPWORDS]
-    )
-    best = F.array_max(scored)
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("unk"))
-
-
-# ---------------------------------------------------------------------------
-# quality scoring (length / punctuation / stopword / repetition ratios)
+# quality features (length / alpha / punctuation / whitespace ratios)
 # ---------------------------------------------------------------------------
 
 
@@ -140,14 +113,3 @@ def quality_flags(text: Column,
     }
     keep = ~flags["too_short"] & ~flags["low_alpha"] & ~flags["bad_token_len"]
     return {**flags, "keep": keep}
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score: rewards alphabetic density and sane
-    token lengths, penalizes extremes; deterministic column algebra."""
-    f = quality_features(text)
-    len_score = F.least(f["n_chars"].cast("double") / F.lit(500.0), F.lit(1.0))
-    alpha_score = f["alpha_ratio"]
-    tok_len = f["mean_token_len"]
-    tok_score = F.when((tok_len >= 3) & (tok_len <= 12), F.lit(1.0)).otherwise(F.lit(0.3))
-    return F.round((len_score * 0.3 + alpha_score * 0.5 + tok_score * 0.2), 6)

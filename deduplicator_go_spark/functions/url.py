@@ -26,18 +26,6 @@ def url_domain(url: Column) -> Column:
     return F.substring_index(url_host(url), ".", 1)
 
 
-def url_normalize(url: Column) -> Column:
-    """Canonical form: lowercase scheme+host, strip fragment, strip
-    trailing slash (normalize-once-at-ingest, the C2 lesson)."""
-    no_frag = F.regexp_replace(url, r"#.*$", "")
-    # lowercase scheme://host, preserve path case
-    return F.regexp_replace(
-        F.regexp_replace(no_frag, r"^([A-Za-z]+://[^/]+)", F.lower(F.regexp_extract(no_frag, r"^([A-Za-z]+://[^/]+)", 1))),
-        r"/$",
-        "",
-    )
-
-
 TRACKING_PARAM_RE = r"^(utm_[a-z]+|fbclid|gclid|msclkid|ref|mc_cid|mc_eid)="
 
 
@@ -76,15 +64,6 @@ def canonical_url(url: Column) -> Column:
         query.isNotNull() & (F.size(kept) > 0),
         F.concat(pre, F.lit("?"), F.concat_ws("&", kept)),
     ).otherwise(pre)
-
-
-def relative_to_prefix(url: Column, prefix) -> Column:
-    """Strip a prefix (archiveRelativePath analog); null if not under it.
-
-    Built from the passed column (the old form hardcoded a column named
-    'url' inside F.expr and broke on Column prefixes)."""
-    p = F.lit(prefix) if isinstance(prefix, str) else prefix
-    return F.when(url.startswith(p), F.substring(url, F.length(p) + 1, F.length(url)))
 
 
 def is_under(url: Column, prefix: str) -> Column:

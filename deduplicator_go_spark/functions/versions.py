@@ -34,15 +34,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-VERSION_RE = r"^[0-9]+(\.[0-9]+)*(-[0-9A-Za-z.\-]+)?$"
-
-
-def is_valid_version(col: Column | str) -> Column:
-    """Publish-side validation analog (rabbitmq.go:201-205): does the
-    string parse as <num>(.<num>)* with an optional -pre suffix."""
-    return F.col(col).rlike(VERSION_RE) if isinstance(col, str) else col.rlike(VERSION_RE)
-
-
 def version_sort_key(col: Column | str) -> Column:
     """→ string key whose lexicographic order IS the version order."""
     v = F.col(col) if isinstance(col, str) else col

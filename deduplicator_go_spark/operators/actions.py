@@ -60,15 +60,6 @@ def plan_summary(plan: DataFrame) -> DataFrame:
     )
 
 
-def apply_removals(catalog: DataFrame, plan: DataFrame, key: str = "url") -> DataFrame:
-    """Apply a plan to the catalog: anti-join out removed rows — the
-    parquet stand-in for Iceberg `MERGE ... WHEN MATCHED THEN DELETE`
-    (the reference deletes per-row inside the move loop,
-    files/move.go:300-305)."""
-    removals = plan.filter(F.col("action") == "remove").select(key)
-    return catalog.join(removals, key, "left_anti")
-
-
 def plan_import(
     incoming: DataFrame,
     stored: DataFrame | None,

@@ -24,13 +24,13 @@ sense for text corpora.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .minhash import PrefixHash
+from .suffix import _lcs_length, _matches, _per_pair
 
 
 def _lcs_block(a: str, b: str, min_len: int,
@@ -38,35 +38,12 @@ def _lcs_block(a: str, b: str, min_len: int,
     """(L, off_a, off_b) of the longest common substring if >= min_len,
     else (0, -1, -1). Among equally-long matches the smallest
     (off_a, off_b) wins — deterministic across engines and retries.
-    Same binary-search-over-PrefixHash shape as suffix._lcs_length,
-    extended to report offsets (collision-proof: candidate offsets are
-    confirmed by direct string comparison)."""
-
-    def match_at(L: int) -> tuple[int, int] | None:
-        if len(a) < L or len(b) < L:
-            return None
-        ha = pa.window(L)
-        hb = pb.window(L)
-        common, ia, ib = np.intersect1d(ha, hb, return_indices=True)
-        best: tuple[int, int] | None = None
-        for x, y in zip(ia, ib):
-            if a[x : x + L] == b[y : y + L]:
-                xy = (int(x), int(y))
-                if best is None or xy < best:
-                    best = xy
-        return best
-
-    if match_at(min_len) is None:
+    L is suffix._lcs_length's; only the offset scan at L is added."""
+    L = _lcs_length(a, b, min_len, pa, pb)
+    if L == 0:
         return 0, -1, -1
-    lo, hi = min_len, min(len(a), len(b))
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if match_at(mid) is not None:
-            lo = mid
-        else:
-            hi = mid - 1
-    off = match_at(lo)
-    return lo, off[0], off[1]
+    off_a, off_b = min(_matches(a, b, L, pa, pb))
+    return L, off_a, off_b
 
 
 def shared_blocks(
@@ -93,20 +70,10 @@ def shared_blocks(
 
     @F.pandas_udf(schema)
     def block(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        cache: dict[str, PrefixHash] = {}
-
-        def ph(t: str) -> PrefixHash:
-            p = cache.get(t)
-            if p is None:
-                p = PrefixHash(t)
-                cache[t] = p
-            return p
-
-        rows = [
-            _lcs_block(x or "", y or "", min_len, ph(x or ""), ph(y or ""))
-            for x, y in zip(ta, tb)
-        ]
-        return pd.DataFrame(rows, columns=["block_len", "off_a", "off_b"])
+        return pd.DataFrame(
+            _per_pair(_lcs_block, ta, tb, min_len),
+            columns=["block_len", "off_a", "off_b"],
+        )
 
     return (
         joined.select(

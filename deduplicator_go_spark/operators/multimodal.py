@@ -2,7 +2,7 @@
 
 Images/audio/video ride through the engine as ``binary`` columns with
 a typed metadata struct — the same shape the documents table uses for
-``html``.  Decode/feature/hash run through ``mapInPandas`` so each
+``html``.  Decode/hash/transcode run through ``mapInPandas`` so each
 Arrow batch amortizes Python overhead and payload bytes never pass
 through Python row objects.
 
@@ -25,9 +25,8 @@ codec libraries (pure numpy/struct, plus stdlib zlib for PNG):
 
 Everything else (progressive JPEG, MP3/...) is honestly out of scope
 here: ``strict=True`` raises ``NotImplementedError`` for unsupported
-mimes/variants, ``strict=False`` falls back to a clearly-marked
-deterministic stub feature (or a NULL hash) so the distributed
-plumbing stays exercisable end-to-end.
+mimes/variants, ``strict=False`` yields a NULL hash (or drops the
+row) so one undecodable payload cannot fail a corpus-wide job.
 
 Because perceptual hashes are computed over DECODED pixels, the same
 image stored as BMP and as PNG produces an identical hash — the
@@ -44,7 +43,6 @@ near-dup detection with zero new shuffle machinery.
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from collections.abc import Iterator
@@ -60,11 +58,6 @@ from .jpeg import decode_jpeg, encode_jpeg  # noqa: F401  (codec registry)
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "
     "width int, height int, duration_ms int"
-)
-
-FEATURE_SCHEMA = (
-    "media_id string, kind string, n_bytes long, payload_sha string, "
-    "feature array<float>"
 )
 
 # Every exception an undecodable payload can raise out of the codecs:
@@ -635,17 +628,6 @@ def video_average_hash(frames: np.ndarray, max_frames: int = 16) -> int:
     return image_average_hash(mean_frame)
 
 
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a decoded-content embedding: bytes of
-    the sha256 digest scaled to [0,1). STUB — replace with a real
-    decode+model when codec libs are available."""
-    digest = hashlib.sha256(payload or b"").digest()
-    return [b / 255.0 for b in digest[:dim]]
-
-
-DECODABLE_MIMES = {"image/bmp", "image/png", "image/jpeg", "image/gif",
-                   "audio/wav", "audio/adpcm", "video/avi"}
-
 _IMAGE_DECODERS = {
     "image/bmp": decode_bmp,
     "image/png": decode_png,
@@ -657,79 +639,6 @@ _IMAGE_DECODERS = {
 # fmt tag); the distinct mime lets a catalog label the codec and the
 # transcode verb pick a target
 _AUDIO_MIMES = {"audio/wav", "audio/adpcm"}
-
-
-def _decoded_feature(payload: bytes, mime: str, dim: int) -> list[float] | None:
-    """Real feature for decodable mimes: images → 8×8 grayscale block
-    means scaled to [0,1); audio → energy envelope scaled by int16
-    range. None for unsupported mimes or undecodable bytes (a declared
-    mime is a claim, not a guarantee — web data lies)."""
-    try:
-        if mime in _IMAGE_DECODERS:
-            img = _IMAGE_DECODERS[mime](payload)
-            gray = img.astype(np.float64).mean(axis=2)
-            blocks = [
-                b.mean() / 255.0
-                for row_band in np.array_split(gray, 8, axis=0)
-                for b in np.array_split(row_band, 8, axis=1)
-            ]
-            return [float(x) for x in (blocks[:dim] if dim < 64 else blocks)]
-        if mime in _AUDIO_MIMES:
-            samples, _ = decode_wav(payload)
-            env = [np.abs(w.astype(np.float64)).mean() / 32768.0 if len(w) else 0.0
-                   for w in np.array_split(samples, max(dim, 1))]
-            return [float(x) for x in env]
-        if mime == "video/avi":
-            frames = decode_avi(payload)
-            # frame-sampled: per-frame mean brightness envelope
-            idx = np.linspace(0, len(frames) - 1, max(dim, 1)).round().astype(int)
-            return [float(frames[i].astype(np.float64).mean() / 255.0) for i in idx]
-    except _DECODE_ERRORS:
-        return None
-    return None
-
-
-def extract_features(media: DataFrame, dim: int = 8, strict: bool = False) -> DataFrame:
-    """binary payload → fixed-width feature vector via mapInPandas.
-
-    Decodable mimes (BMP/PNG/WAV) produce REAL content features
-    (block-mean grayscale / energy envelope). For any other
-    mime: ``strict=True`` raises NotImplementedError (no JPEG/MP3
-    codec libraries in this environment); ``strict=False`` substitutes
-    the clearly-marked deterministic stub feature so the plumbing
-    (schema, batching, column pruning) stays exercisable.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            feats = []
-            for p, mime in zip(payloads, pdf["mime"]):
-                f = _decoded_feature(p, mime, dim) if p is not None else None
-                if f is None:
-                    if strict:
-                        raise NotImplementedError(
-                            f"decoding mime {mime!r} requires codec libraries "
-                            "not present in this image (supported here: "
-                            f"{sorted(DECODABLE_MIMES)})"
-                        )
-                    f = _fake_feature(p or b"", dim)
-                feats.append(f)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(lambda p: len(p) if p is not None else 0).astype("int64"),
-                    "payload_sha": payloads.map(
-                        lambda p: hashlib.sha256(p or b"").hexdigest()
-                    ),
-                    "feature": feats,
-                }
-            )
-
-    return media.select("media_id", "kind", "mime", "payload").mapInPandas(
-        batches, FEATURE_SCHEMA
-    )
 
 
 def perceptual_hashes(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -895,21 +804,6 @@ def phash_dup_pairs(
         F.col("url_b").alias("media_id_b"),
         "kind",
         "hamming",
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Per-kind payload statistics — native exprs (binary length only,
-    payload never decoded)."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.length("payload")).alias("total_bytes"),
-            F.avg(F.length("payload")).alias("avg_bytes"),
-            F.max(F.length("payload")).alias("max_bytes"),
-        )
-        .orderBy("kind")
     )
 
 

@@ -28,6 +28,8 @@ Verification is a vectorized pandas UDF over Arrow batches of pairs.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -78,30 +80,37 @@ def anchor_table(docs: DataFrame, k: int = 64, mod: int = 16, text_col: str = "t
     )
 
 
+def _matches(a: str, b: str, L: int,
+             pa: PrefixHash, pb: PrefixHash) -> Iterator[tuple[int, int]]:
+    """Verified offsets (x, y) with ``a[x:x+L] == b[y:y+L]``, lazily.
+
+    Candidates are the windows whose hashes intersect (the first
+    occurrence of each shared hash on each side); each is confirmed by
+    a direct string comparison, so a hash collision never yields a
+    false match."""
+    if len(a) < L or len(b) < L:
+        return
+    _, ia, ib = np.intersect1d(pa.window(L), pb.window(L), return_indices=True)
+    for x, y in zip(ia, ib):
+        if a[x : x + L] == b[y : y + L]:
+            yield int(x), int(y)
+
+
 def _lcs_length(a: str, b: str, min_len: int,
                 pa_h: PrefixHash | None = None,
                 pb_h: PrefixHash | None = None) -> int:
     """Exact longest-common-substring length if >= min_len, else 0.
 
     Binary search on L over shared PrefixHash arrays (each probe is
-    one vectorized windowed-diff pass, not a recompute): a common
-    L-gram exists iff hash sets intersect AND a direct string
-    comparison at matched offsets confirms (collision-proof).
-    Callers that see the same text across many pairs pass memoized
-    PrefixHash objects."""
+    one vectorized windowed-diff pass, not a recompute) with "a
+    verified L-gram match exists" as the predicate; a probe stops at
+    its first verified match. Callers that see the same text across
+    many pairs pass memoized PrefixHash objects."""
     pa_h = pa_h if pa_h is not None else PrefixHash(a)
     pb_h = pb_h if pb_h is not None else PrefixHash(b)
 
     def common_at(L: int) -> bool:
-        if len(a) < L or len(b) < L:
-            return False
-        ha = pa_h.window(L)
-        hb = pb_h.window(L)
-        common, ia, ib = np.intersect1d(ha, hb, return_indices=True)
-        for x, y in zip(ia, ib):
-            if a[x : x + L] == b[y : y + L]:
-                return True
-        return False
+        return next(_matches(a, b, L, pa_h, pb_h), None) is not None
 
     if not common_at(min_len):
         return 0
@@ -113,6 +122,22 @@ def _lcs_length(a: str, b: str, min_len: int,
         else:
             hi = mid - 1
     return lo
+
+
+def _per_pair(kernel: Callable, ta: pd.Series, tb: pd.Series, min_len: int) -> list:
+    """``kernel(a, b, min_len, PrefixHash(a), PrefixHash(b))`` for each
+    pair of an Arrow batch, NULL texts read as empty. Docs recur across
+    pairs (template chains), so each distinct text's O(len) prefix
+    array is built once per batch."""
+    ph: dict[str, PrefixHash] = {}
+    out = []
+    for x, y in zip(ta, tb):
+        x, y = x or "", y or ""
+        for t in (x, y):
+            if t not in ph:
+                ph[t] = PrefixHash(t)
+        out.append(kernel(x, y, min_len, ph[x], ph[y]))
+    return out
 
 
 def verify_substr_pairs(
@@ -130,25 +155,7 @@ def verify_substr_pairs(
 
     @F.pandas_udf(T.LongType())
     def lcs(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        # docs recur across pairs (template chains): memoize the O(len)
-        # prefix-hash arrays per distinct text within the batch — the
-        # same batch-level reuse as exact_jaccard_udf
-        cache: dict[str, PrefixHash] = {}
-
-        def ph(t: str) -> PrefixHash:
-            p = cache.get(t)
-            if p is None:
-                p = PrefixHash(t)
-                cache[t] = p
-            return p
-
-        return pd.Series(
-            [
-                _lcs_length(x or "", y or "", min_len, ph(x or ""), ph(y or ""))
-                for x, y in zip(ta, tb)
-            ],
-            dtype="int64",
-        )
+        return pd.Series(_per_pair(_lcs_length, ta, tb, min_len), dtype="int64")
 
     return (
         joined.select(

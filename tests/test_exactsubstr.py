@@ -17,6 +17,9 @@ def _blk(a, b, min_len):
 
 
 def _brute(a, b):
+    """(L, off_a, off_b): the longest common substring length and, among
+    the matches of that length, the lexicographically smallest
+    (off_a, off_b); (0, -1, -1) when no character is shared."""
     best = (0, -1, -1)
     for i in range(len(a)):
         for j in range(len(b)):
@@ -35,17 +38,17 @@ def test_lcs_block_matches_bruteforce():
         ("aaaaaa", "aaaa", 2),          # periodic: smallest offsets win
         ("abcdef", "uvwxyz", 3),        # no match
         ("ppSHAREDtailw", "SHAREDzz", 5),
+        ("CDxxABxx", "ABzzCD", 2),      # two distinct blocks: (0, 4) wins
+        ("xyzABC", "ABCxyz", 3),        # (0, 3) wins over (3, 0)
+        ("QRSTuvWXYZ", "WXYZabQRST", 4),
+        ("abababab", "babab", 3),       # periodic, shifted
     ]
     for a, b, m in cases:
         bl, ba, bb = _brute(a, b)
         if bl < m:
             assert _blk(a, b, m) == (0, -1, -1), (a, b)
         else:
-            got = _blk(a, b, m)
-            assert got[0] == bl, (a, b, got)
-            # same length; offsets must point at a real match
-            L, x, y = got
-            assert a[x : x + L] == b[y : y + L]
+            assert _blk(a, b, m) == (bl, ba, bb), (a, b)
 
 
 def test_shared_blocks_and_strip(spark):

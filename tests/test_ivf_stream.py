@@ -1,10 +1,9 @@
-"""IVF ANN + streaming dedup + empty-input pipeline edge."""
+"""IVF ANN + empty-input pipeline edge."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from deduplicator_go_spark.operators import ivf, similarity
 
@@ -54,29 +53,6 @@ def test_ivf_hot_cell_salting_preserves_results(spark):
     key = lambda r: (r["id_a"], r["rank"])
     assert sorted(((r["id_a"], r["id_b"], r["cos"], r["rank"]) for r in salted)) == \
            sorted(((r["id_a"], r["id_b"], r["cos"], r["rank"]) for r in plain))
-
-
-def test_stream_dedup(spark, tmp_path):
-    import shutil
-
-    from deduplicator_go_spark.streaming import events_stream
-
-    src = tmp_path / "stream"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [(1, "2025-01-01 00:00:00", 10, "click", 1.0, "{}"),
-         (2, "2025-01-01 00:00:05", 10, "click", 1.0, "{}"),   # dup key within watermark
-         (3, "2025-01-01 00:10:00", 11, "view", 2.0, "{}")],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.coalesce(1).write.parquet(str(src / "p"))
-    stream = events_stream.read_events_stream(spark, str(src / "p"))
-    deduped = events_stream.stream_dedup(stream, ["user_id", "event_type"])
-    q = (deduped.writeStream.outputMode("append").format("memory")
-         .queryName("t_dedup_out").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.sql("SELECT user_id, event_type FROM t_dedup_out").collect()
-    assert sorted((r["user_id"], r["event_type"]) for r in got) == [(10, "click"), (11, "view")]
 
 
 def test_pipeline_empty_input(spark, tmp_path):

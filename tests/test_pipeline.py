@@ -131,6 +131,28 @@ def test_config_change_invalidates(spark, docs, tmp_path_factory):
     assert by_name["minhash_sigs"].rows == n_first  # full recompute, no stale rows
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [
+        dict(substr_min_len=32),            # < default substr_anchor_k=64
+        dict(substr_anchor_mod=0),
+        dict(shingle_size=0),
+        dict(num_perm=0),
+        dict(substr_anchor_k=-1),
+        dict(cluster_buckets=0),
+        dict(cc_max_iters=0),
+        dict(verify_threshold=0.0),
+        dict(verify_threshold=1.5),
+    ],
+)
+def test_config_rejects_unsafe_settings(bad):
+    with pytest.raises(ValueError):
+        DedupConfig(**bad)
+    # validation adds no field: valid configs keep their checkpoint hash
+    assert DedupConfig().params_hash() == "8b18697beadc0586"
+    DedupConfig(substr_min_len=64, verify_threshold=1.0)  # both bounds inclusive
+
+
 def test_incremental_tick_appends_only_new_work(spark, docs, tmp_path_factory):
     """The reference's operating model (1-min timer over a work queue):
     tick 2 on the same catalog with a grown input must (a) append only

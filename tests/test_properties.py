@@ -16,6 +16,7 @@ from deduplicator_go_spark.operators.minhash import (
     _perm_coeffs,
     shingle_hashes,
 )
+from deduplicator_go_spark.operators.exactsubstr import _lcs_block
 from deduplicator_go_spark.operators.suffix import _lcs_length
 
 TEXT = st.text(
@@ -88,6 +89,7 @@ def test_lcs_exactness_against_bruteforce(data):
             best = max(best, k)
     min_len = 2
     got = _lcs_length(a, b, min_len)
+    assert _lcs_block(a, b, min_len, PrefixHash(a), PrefixHash(b))[0] == got
     if best >= min_len:
         assert got == best
     else:

@@ -26,24 +26,6 @@ def test_token_count(spark):
     assert got == [3, 0, 0, 1]
 
 
-def test_lang_id_heuristic(spark):
-    df = spark.createDataFrame(
-        [("the cat and the dog is in the house",),
-         ("der hund und die katze ist nicht hier",),
-         ("le chat est pour la maison et les chiens",),
-         ("zzz qqq xxx",)],
-        "t string",
-    )
-    got = [r[0] for r in df.select(X.lang_id(F.col("t"))).collect()]
-    assert got == ["en", "de", "fr", "unk"]
-
-
-def test_quality_score_ranges(docs):
-    scored = docs.select(X.quality_score(F.col("text")).alias("q"))
-    row = scored.agg(F.min("q"), F.max("q")).collect()[0]
-    assert 0.0 <= row[0] <= row[1] <= 1.0
-
-
 def test_fingerprint_collapses_whitespace_case(spark):
     df = spark.createDataFrame(
         [("Hello   World",), ("hello world",)], "t string"

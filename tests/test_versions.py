@@ -37,16 +37,6 @@ def test_version_ordering_matches_hashicorp_semantics(spark):
     assert not eq["ab"] and not eq["ba"]
 
 
-def test_version_validation(spark):
-    df = spark.createDataFrame(
-        [("1.2.3",), ("10.0",), ("2.0.0-rc1",), ("not-a-semver",), ("v1.2",), ("",)],
-        "v string",
-    )
-    got = {r["v"]: r["ok"] for r in df.select("v", V.is_valid_version("v").alias("ok")).collect()}
-    assert got == {"1.2.3": True, "10.0": True, "2.0.0-rc1": True,
-                   "not-a-semver": False, "v1.2": False, "": False}
-
-
 def test_latest_versions_per_group(spark):
     rows = [
         ("app", "1.3.5"), ("app", "1.10.0"), ("app", "2.0.0-rc1"), ("app", "1.10.0"),
