@@ -61,8 +61,9 @@ class DedupConfig:
     substr_anchor_mod: int = 32
 
     def __post_init__(self) -> None:
-        for name in ("shingle_size", "num_perm", "substr_anchor_k",
-                     "substr_anchor_mod", "cluster_buckets", "cc_max_iters"):
+        for name in ("shingle_size", "num_perm", "lsh_bands", "lsh_rows",
+                     "band_salt", "substr_anchor_k", "substr_anchor_mod",
+                     "cluster_buckets", "cc_max_iters"):
             if getattr(self, name) <= 0:
                 raise ValueError(f"{name} must be positive, got {getattr(self, name)}")
         if self.lsh_bands * self.lsh_rows != self.num_perm:

@@ -26,15 +26,37 @@ files/hash.go:27-33): re-invoking run() on the same catalog with a
 GROWN input appends only frontier work at every per-document stage
 (validate, sign, minhash, band, anchor), re-pairs only LSH/anchor
 buckets whose membership changed (bucket-membership diff via the
-staged band/anchor tables + candidates_done/substr_done bookmarks),
-and LCS-/Jaccard-verifies only newly-appended candidate pairs.
-exact_edges appends edges only for (hash, size) groups touched by
-newly-signed docs; clusters seeds connected components with prior
-labels + frontier edges and rewrites only the copy-on-write buckets
-holding an affected member or new doc; dup_report rebuilds only
-report rows of clusters whose membership changed. Every stage's
-per-tick cost is frontier-proportional — nothing re-reduces the
-standing corpus.
+staged band/anchor tables), and LCS-/Jaccard-verifies only
+newly-appended candidate pairs. exact_edges appends edges only for
+(hash, size) groups touched by newly-signed docs; clusters seeds
+connected components with prior labels + frontier edges and rewrites
+only the copy-on-write buckets holding an affected member or new doc;
+dup_report rebuilds only report rows of clusters whose membership
+changed.
+
+Frontier protocol: the eight single-producer append stages
+(exact_sigs, exact_edges, minhash_sigs, band_rows, candidates,
+verified_pairs, anchor_rows, substr_pairs) each keep one
+``<stage>_src`` bookmark, ``{params_hash, <upstream>: files, self:
+files}``. ``_stage`` writes it after the stage's commit; ``_frontier``
+alone reads it. Without a valid one, a stage takes the whole upstream,
+anti-joined against its whole own table. clusters reads three
+producers and keeps its own ``clusters_done`` bookmark.
+
+What a tick WRITES is frontier-proportional; what it reads is not yet.
+These whole-table reads remain on the tick path:
+- valid_docs anti-joins the input against every valid_docs url;
+- the bucket diff (``_pairs``) semi-joins all of band_rows /
+  anchor_rows to find the members of touched buckets;
+- verify_pairs scans all of minhash_sigs and attaches texts from all
+  of valid_docs (the substring pass likewise reads all of
+  verified_pairs, exact_sigs and valid_docs);
+- exact_edges anti-joins against the whole exact_edges table;
+- clusters scans the clusters table twice (url lookup, then members of
+  affected components), and dup_report scans it once more and rewrites
+  the whole report;
+- the catalog's lineage step reads every file footer of the table it
+  just wrote.
 
 Input contract: APPEND-ONLY, matching Iceberg fast-append semantics —
 a tick may add documents but never mutate or remove standing (url,
@@ -90,6 +112,22 @@ class PipelineReport:
         return self.docs_in / self.wall_sec if self.wall_sec else 0.0
 
 
+@dataclass
+class Frontier:
+    """The work an append stage has left, read from its bookmark by
+    ``DedupPipeline._frontier``."""
+    upstream: str            # the producer table's name
+    rows: DataFrame          # upstream rows not yet processed
+    done: DataFrame | None   # own rows that may already cover some of them
+    incremental: bool        # a valid bookmark exists (rows is the frontier only)
+
+    def drop_done(self, df: DataFrame, keys: list[str]) -> DataFrame:
+        """``df`` without the rows whose ``keys`` the stage already holds."""
+        if self.done is None:
+            return df
+        return df.join(self.done.select(*keys).distinct(), keys, "left_anti")
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -135,12 +173,23 @@ class DedupPipeline:
                deps: list[str] | None = None,
                extra_deps: dict | None = None,
                partition_by: list[str] | None = None,
-               release: bool = True) -> StageResult:
+               release: bool = True,
+               upstream: str | None = None) -> StageResult:
         """Run one stage unless its commit already covers the current
         upstream. ``mode="append"`` is the frontier-driven form: re-invoked
         on a grown upstream it appends only the frontier's rows, reusing
         partial output from a killed run when params match (wiped
-        otherwise by ``incremental_begin``)."""
+        otherwise by ``incremental_begin``).
+
+        ``upstream`` names the one producer of an append stage: ``build``
+        then receives the stage's ``Frontier`` (``deps`` default to the
+        upstream), and after the stage's own commit its ``<name>_src``
+        bookmark records (upstream manifest processed, own manifest at
+        commit). A kill between the commit and the bookmark leaves a
+        stale bookmark whose only cost is the frontier-proportional
+        dup scan in ``_frontier``."""
+        if upstream is not None:
+            mode, deps = "append", deps or [upstream]
         up = self._deps_fingerprint(deps, extra_deps)
         if self.catalog.is_complete(name, self.ph, upstream_rows=up):
             info = self.catalog.commit_info(name)
@@ -148,9 +197,16 @@ class DedupPipeline:
         t0 = time.time()
         if mode == "append":
             self.catalog.incremental_begin(name, self.ph)
-        df = build()
+        df = build(self._frontier(name, upstream)) if upstream else build()
         info = self.catalog.write(df, name, self.ph, mode=mode,
                                   partition_by=partition_by, upstream_rows=up)
+        if upstream is not None:
+            self.catalog.write_bookmark(
+                f"{name}_src",
+                {"params_hash": self.ph,
+                 upstream: self.catalog.current_files(upstream),
+                 "self": self.catalog.current_files(name)},
+            )
         if release:
             self._release_persisted()
         return StageResult(name, skipped=False, rows=info.rows, wall_ms=int((time.time() - t0) * 1000))
@@ -158,91 +214,65 @@ class DedupPipeline:
     def _read(self, name: str) -> DataFrame:
         return self.catalog.read(self.spark, name)
 
-    def _pair_bookmark(self, done_name: str, producer: str) -> list[str] | None:
-        """The file-manifest bookmark a pair stage recorded for its
-        producer table, or None when absent / stamped under different
-        params (→ the stage takes its full-build branch)."""
-        bm = self.catalog.read_bookmark(done_name)
-        if bm is None or bm.get("params_hash") != self.ph:
-            return None
-        return bm.get(producer, [])
+    def _frontier(self, name: str, upstream: str) -> Frontier:
+        """The work left for append stage ``name``, from its
+        ``<name>_src`` bookmark (the Iceberg incremental-snapshot-read
+        shape).
 
-    def _write_pair_bookmark(self, done_name: str, producer: str) -> None:
-        self.catalog.write_bookmark(
-            done_name,
-            {"params_hash": self.ph,
-             producer: self.catalog.current_files(producer)},
-        )
-
-    def _doc_frontier(self, name: str, upstream: str,
-                      keys: list[str] | None = None) -> DataFrame | None:
-        """Frontier rows of ``upstream`` not yet processed into ``name``,
-        via the stage's source bookmark (the Iceberg incremental-
-        snapshot-read shape): ONLY upstream files appended since the
-        bookmark are scanned — never the standing corpus. The round-4
-        form anti-joined the full upstream against a ``distinct()`` of
-        the stage's own output urls; for exploded outputs (band_rows
-        ~bands rows/doc, anchor_rows ~len/mod rows/doc) that distinct
-        was a standing-corpus shuffle per tick and the dominant tick
-        cost (anchor_rows: 14 s of a 41 s tick at 20k docs).
+        With a bookmark stamped under these params, ``rows`` is ONLY the
+        upstream files appended since it — never the standing corpus —
+        and ``done`` is the stage's own files appended since its
+        ``self`` manifest. Never a ``distinct()`` of the whole own
+        table: for exploded outputs (band_rows ~bands rows/doc,
+        anchor_rows ~len/mod rows/doc) that is a standing-corpus
+        shuffle per tick (anchor_rows: 14 s of a 41 s tick at 20k docs).
 
         Kill-window defence (output committed, bookmark write lost):
-        rows already appended live in output files the bookmark's
-        ``self`` manifest doesn't cover — scan exactly those files
-        (frontier-proportional) and anti-join their keys away, so the
-        rerun appends no duplicates. Returns None when no valid
-        bookmark exists (first run / params change / pre-upgrade
-        catalog) — the caller takes its full-derivation branch."""
-        keys = keys or ["url"]
+        rows already appended live in own files the ``self`` manifest
+        doesn't cover, so anti-joining ``done`` away makes the rerun
+        append no duplicates; a stale bookmark only widens ``rows`` to
+        a superset that the same anti-join absorbs.
+
+        Without a valid bookmark (first run, params change, a killed
+        first run, a pre-bookmark catalog), ``rows`` is the whole
+        upstream and ``done`` the whole own table, if it exists."""
         bm = self.catalog.read_bookmark(f"{name}_src")
-        if (
-            bm is None or bm.get("params_hash") != self.ph
-            or not self.catalog.exists(name)
-        ):
-            return None
-        frontier = self.catalog.appended_since(self.spark, upstream,
-                                               bm.get(upstream, []))
-        already = (
-            self.catalog.appended_since(self.spark, name, bm.get("self", []))
-            .select(*keys).distinct()
-        )
-        return frontier.join(already, keys, "left_anti")
-
-    def _write_doc_bookmark(self, name: str, upstream: str) -> None:
-        """Record (upstream manifest processed, own manifest at commit)
-        — written AFTER the stage commit so ``self`` covers this tick's
-        files; a kill in between leaves a stale bookmark whose only
-        cost is the frontier-proportional dup scan above."""
-        self.catalog.write_bookmark(
-            f"{name}_src",
-            {"params_hash": self.ph,
-             upstream: self.catalog.current_files(upstream),
-             "self": self.catalog.current_files(name)},
+        if (bm is not None and bm.get("params_hash") == self.ph
+                and self.catalog.exists(name)):
+            return Frontier(
+                upstream,
+                rows=self.catalog.appended_since(self.spark, upstream,
+                                                 bm.get(upstream, [])),
+                done=self.catalog.appended_since(self.spark, name,
+                                                 bm.get("self", [])),
+                incremental=True,
+            )
+        return Frontier(
+            upstream,
+            rows=self._read(upstream),
+            done=self._read(name) if self.catalog.exists(name) else None,
+            incremental=False,
         )
 
-    def _bucket_diff_pairs(self, bands_name: str, bands: DataFrame,
-                           seen_files: list[str],
-                           existing_name: str) -> DataFrame:
-        """Tick-incremental pair generation via bucket-membership diff —
-        shared by the LSH candidate stage and the substr stage (their
-        staged tables have the same (url, band_id, band_hash) shape).
-
-        The frontier (docs whose pairs have not been generated) is read
-        from exactly the band/anchor files appended since the stage's
-        bookmark — the Iceberg incremental-snapshot-read shape via
-        ``CheckpointCatalog.appended_since`` — NOT re-derived with a
-        full-table distinct + anti-join per tick (round-4 verdict
-        finding: that was a standing-corpus scan per tick for
-        information the append stage had just computed).
-
-        Only buckets containing a frontier member are re-paired, and
-        only pairs touching the frontier are kept (old-old pairs were
-        generated on a previous tick). The anti-join against
-        ``existing_name`` makes a kill between the pair commit and the
-        bookmark rewrite cost only re-derived — then dropped — pairs,
-        never duplicate rows; a stale bookmark only widens the frontier
-        to a superset (same defence absorbs it)."""
+    def _pairs(self, f: Frontier) -> DataFrame:
+        """Candidate pairs from a staged (url, band_id, band_hash) table
+        — the one pair builder of the LSH candidate stage and the substr
+        stage. Without a bookmark, the full banded self-join; with one,
+        the bucket-membership diff: only buckets containing a frontier
+        member are re-paired, and only pairs touching the frontier are
+        kept (old-old pairs were generated on a previous tick). Pairs
+        already in the stage's table (a killed run's append) are
+        anti-joined away, so a resume never doubles the table."""
         c = self.config
+        if not f.incremental:
+            pairs = candidate_pairs(
+                f.rows,
+                c.band_pair_cap,
+                c.band_salt,
+                materialize=False,  # parquet-backed input IS the pin
+                collision_broadcast=c.lsh_collision_broadcast,
+            )
+            return f.drop_done(pairs, ["url_a", "url_b"])
         # the appended rows ARE the frontier's band memberships — both
         # the frontier urls and the touched buckets come straight from
         # them (one small materialization), so the only standing-table
@@ -250,13 +280,14 @@ class DedupPipeline:
         # deriving new_buckets via a second full-bands semi-join cost an
         # extra standing scan per tick.
         new_rows = (
-            self.catalog.appended_since(self.spark, bands_name, seen_files)
-            .select("url", "band_id", "band_hash")
+            f.rows.select("url", "band_id", "band_hash")
             .localCheckpoint(eager=True)
         )
         new_urls = new_rows.select("url").distinct()
         new_buckets = new_rows.select("band_id", "band_hash").distinct()
-        members = bands.join(new_buckets, ["band_id", "band_hash"], "left_semi")
+        members = self._read(f.upstream).join(
+            new_buckets, ["band_id", "band_hash"], "left_semi"
+        )
         pairs = candidate_pairs(
             members,
             c.band_pair_cap,
@@ -274,8 +305,7 @@ class DedupPipeline:
             )
             .dropDuplicates(["url_a", "url_b"])
         )
-        existing = self._read(existing_name).select("url_a", "url_b")
-        return touches_new.join(existing, ["url_a", "url_b"], "left_anti")
+        return f.drop_done(touches_new, ["url_a", "url_b"])
 
     # -- stages -----------------------------------------------------------
     def _release_persisted(self) -> None:
@@ -386,21 +416,12 @@ class DedupPipeline:
         )
         valid = self._read("valid_docs")
 
-        def build_exact_sigs() -> DataFrame:
-            frontier = self._doc_frontier("exact_sigs", "valid_docs")
-            if frontier is None:  # first run / params change: full anti-join
-                frontier = valid
-                if self.catalog.exists("exact_sigs"):
-                    done = self._read("exact_sigs").select("url")
-                    frontier = frontier.join(done, "url", "left_anti")
-            return exact.with_signature(frontier)
+        def build_exact_sigs(f: Frontier) -> DataFrame:
+            return exact.with_signature(f.drop_done(f.rows, ["url"]))
 
-        sig_stage = self._stage(
-            "exact_sigs", build_exact_sigs, mode="append", deps=["valid_docs"]
+        report.stages.append(
+            self._stage("exact_sigs", build_exact_sigs, upstream="valid_docs")
         )
-        report.stages.append(sig_stage)
-        if not sig_stage.skipped:
-            self._write_doc_bookmark("exact_sigs", "valid_docs")
 
         # exact edges: append-incremental. On a tick only (hash, size)
         # groups touched by newly-signed docs are re-starred — the
@@ -409,17 +430,16 @@ class DedupPipeline:
         # corpus. A new member smaller than a group's prior root yields
         # a second star root for that group; the union of stars is
         # connectivity-equivalent (CC labels by component-min, not by
-        # star shape). The anti-join defence keeps kill-between-write-
-        # and-bookmark and stale-bookmark windows duplicate-free.
-        def build_exact_edges() -> DataFrame:
-            sigs = self._read("exact_sigs")
-            seen = self._pair_bookmark("exact_edges_done", "exact_sigs")
-            if self.catalog.exists("exact_edges") and seen is not None:
-                new_sigs = self.catalog.appended_since(
-                    self.spark, "exact_sigs", seen
+        # star shape). Re-starring a touched group regenerates its old
+        # edges too, so the anti-join runs against the WHOLE edge table,
+        # not only the files since the bookmark.
+        def build_exact_edges(f: Frontier) -> DataFrame:
+            sigs = f.rows
+            if f.incremental:
+                touched = f.rows.select("content_sha", "size").distinct()
+                sigs = self._read("exact_sigs").join(
+                    touched, ["content_sha", "size"], "left_semi"
                 )
-                touched = new_sigs.select("content_sha", "size").distinct()
-                sigs = sigs.join(touched, ["content_sha", "size"], "left_semi")
             edges = exact.exact_edges(sigs)
             if self.catalog.exists("exact_edges"):
                 edges = edges.join(
@@ -428,24 +448,15 @@ class DedupPipeline:
                 )
             return edges
 
-        edge_stage = self._stage(
-            "exact_edges", build_exact_edges, mode="append", deps=["exact_sigs"]
+        report.stages.append(
+            self._stage("exact_edges", build_exact_edges, upstream="exact_sigs")
         )
-        report.stages.append(edge_stage)
-        if not edge_stage.skipped:
-            self._write_pair_bookmark("exact_edges_done", "exact_sigs")
 
         # minhash: incremental append against own completed output — the
         # Spark analog of the reference's `hash IS NULL` work queue.
         # Partial output from a killed run is only reused when it was
         # computed under the same params (sidecar check), otherwise wiped.
-        def build_minhash() -> DataFrame:
-            frontier = self._doc_frontier("minhash_sigs", "valid_docs")
-            if frontier is None:
-                frontier = valid
-                if self.catalog.exists("minhash_sigs"):
-                    done = self._read("minhash_sigs").select("url")
-                    frontier = frontier.join(done, "url", "left_anti")
+        def build_minhash(f: Frontier) -> DataFrame:
             # The signature table carries two derived columns computed
             # in the SAME job that writes it (narrow projections over
             # the UDF output — no extra scan):
@@ -463,98 +474,40 @@ class DedupPipeline:
             from deduplicator_go_spark.operators.minhash import packed_sig16
 
             return minhash_signatures(
-                frontier.select("url", "text"), c.shingle_size, c.num_perm,
-                c.minhash_seed,
+                f.drop_done(f.rows, ["url"]).select("url", "text"),
+                c.shingle_size, c.num_perm, c.minhash_seed,
             ).withColumns({
                 "bands": band_hash_array(c.lsh_bands, c.lsh_rows),
                 "sig16": packed_sig16(c.num_perm),
             })
 
-        mh_stage = self._stage(
-            "minhash_sigs", build_minhash, mode="append", deps=["valid_docs"]
+        report.stages.append(
+            self._stage("minhash_sigs", build_minhash, upstream="valid_docs")
         )
-        report.stages.append(mh_stage)
-        if not mh_stage.skipped:
-            self._write_doc_bookmark("minhash_sigs", "valid_docs")
 
         # band rows: the LSH band table, STAGED in the catalog (not an
         # in-stage temporary) so the candidate stage can diff bucket
         # membership across ticks. Append-only, one row per (doc, band).
-        def build_band_rows() -> DataFrame:
-            sigs = self._doc_frontier("band_rows", "minhash_sigs")
-            if sigs is None:
-                sigs = self._read("minhash_sigs")
-                if self.catalog.exists("band_rows"):
-                    done = self._read("band_rows").select("url").distinct()
-                    sigs = sigs.join(done, "url", "left_anti")
-            return band_table(sigs, c.lsh_bands, c.lsh_rows)
+        def build_band_rows(f: Frontier) -> DataFrame:
+            return band_table(f.drop_done(f.rows, ["url"]), c.lsh_bands, c.lsh_rows)
 
-        band_stage = self._stage(
-            "band_rows", build_band_rows, mode="append", deps=["minhash_sigs"]
+        report.stages.append(
+            self._stage("band_rows", build_band_rows, upstream="minhash_sigs")
         )
-        report.stages.append(band_stage)
-        if not band_stage.skipped:
-            self._write_doc_bookmark("band_rows", "minhash_sigs")
 
         # candidates: on the first tick, the full banded self-join; on
         # later ticks, ONLY buckets containing a new member are
         # re-paired, and only pairs touching a new doc are appended
-        # (old-old pairs already exist). candidates_done is a
-        # metadata-only bookmark of the band_rows file manifest at
-        # pairing time (rewritten idempotently after each commit, so a
-        # kill between the two writes only costs re-derived — then
-        # anti-joined-away — pairs, never duplicates).
-        def build_candidates() -> DataFrame:
-            bands = self._read("band_rows")
-            cand_seen = self._pair_bookmark("candidates_done", "band_rows")
-            incremental = self.catalog.exists("candidates") and cand_seen is not None
-            if not incremental:
-                pairs = candidate_pairs(
-                    bands,
-                    c.band_pair_cap,
-                    c.band_salt,
-                    materialize=False,  # parquet-backed input IS the pin
-                    collision_broadcast=c.lsh_collision_broadcast,
-                )
-                # a kill in the window between the pair write completing
-                # and the commit-marker/bookmark writes leaves a full
-                # table with no bookmark; without this anti-join the
-                # resume would append the whole set again (the same
-                # partial-output defence every per-doc stage has)
-                if self.catalog.exists("candidates"):
-                    pairs = pairs.join(
-                        self._read("candidates").select("url_a", "url_b"),
-                        ["url_a", "url_b"], "left_anti",
-                    )
-                return pairs
-            return self._bucket_diff_pairs(
-                "band_rows", bands, cand_seen, "candidates"
-            )
-
-        cand_stage = self._stage(
-            "candidates", build_candidates, mode="append", deps=["band_rows"]
+        # (old-old pairs already exist) — see _pairs
+        report.stages.append(
+            self._stage("candidates", self._pairs, upstream="band_rows")
         )
-        report.stages.append(cand_stage)
-        if not cand_stage.skipped:
-            # metadata only — the manifest comes from the frags sidecar,
-            # no scan/write job (round 4 full-distinct'd band_rows and
-            # wrote a url table here, a standing-corpus job per tick)
-            self._write_pair_bookmark("candidates_done", "band_rows")
 
         # verification: only pairs not yet verified (pair-key frontier) —
         # on a tick, exactly the pairs the candidate stage appended.
-        def build_verified() -> DataFrame:
-            pairs = self._doc_frontier(
-                "verified_pairs", "candidates", keys=["url_a", "url_b"]
-            )
-            on_tick = pairs is not None
-            if pairs is None:
-                pairs = self._read("candidates")
-                if self.catalog.exists("verified_pairs"):
-                    done_pairs = self._read("verified_pairs").select("url_a", "url_b")
-                    pairs = pairs.join(done_pairs, ["url_a", "url_b"], "left_anti")
+        def build_verified(f: Frontier) -> DataFrame:
             return verify_pairs(
-                pairs,
+                f.drop_done(f.rows, ["url_a", "url_b"]),
                 valid,
                 c.shingle_size,
                 c.verify_threshold,
@@ -564,15 +517,12 @@ class DedupPipeline:
                 # — semi-prune the signature table to its endpoints.
                 # from-scratch: endpoints ≈ corpus, the prune is a pure
                 # extra pass + checkpoint barrier — skip it.
-                prune_endpoints=on_tick,
+                prune_endpoints=f.incremental,
             )
 
-        ver_stage = self._stage(
-            "verified_pairs", build_verified, mode="append", deps=["candidates"]
+        report.stages.append(
+            self._stage("verified_pairs", build_verified, upstream="candidates")
         )
-        report.stages.append(ver_stage)
-        if not ver_stage.skipped:
-            self._write_doc_bookmark("verified_pairs", "candidates")
 
         if self.with_substr:
             # anchor rows: the winnowing-anchor table, STAGED in the
@@ -581,22 +531,15 @@ class DedupPipeline:
             # anchor-bucket membership across ticks. Append-only; docs
             # shorter than min_len can never hold a qualifying block
             # (LCS <= min(len)) so they never enter the table.
-            def build_anchor_rows() -> DataFrame:
-                frontier = self._doc_frontier("anchor_rows", "valid_docs")
-                if frontier is None:
-                    frontier = valid
-                    if self.catalog.exists("anchor_rows"):
-                        done = self._read("anchor_rows").select("url").distinct()
-                        frontier = frontier.join(done, "url", "left_anti")
-                frontier = frontier.filter(F.length("text") >= c.substr_min_len)
+            def build_anchor_rows(f: Frontier) -> DataFrame:
+                frontier = f.drop_done(f.rows, ["url"]).filter(
+                    F.length("text") >= c.substr_min_len
+                )
                 return anchor_table(frontier, c.substr_anchor_k, c.substr_anchor_mod)
 
-            anchor_stage = self._stage(
-                "anchor_rows", build_anchor_rows, mode="append", deps=["valid_docs"]
+            report.stages.append(
+                self._stage("anchor_rows", build_anchor_rows, upstream="valid_docs")
             )
-            report.stages.append(anchor_stage)
-            if not anchor_stage.skipped:
-                self._write_doc_bookmark("anchor_rows", "valid_docs")
 
             # substr pairs: tick-incremental like candidates — on tick 1
             # the full anchor-blocked self-join; on later ticks only
@@ -607,31 +550,7 @@ class DedupPipeline:
             # Next #2). Whole-doc dup pairs (exact-identical sha, or
             # LSH-verified near-dups) are already clustered — pruned
             # BEFORE the expensive LCS verification.
-            def build_substr() -> DataFrame:
-                anchors = self._read("anchor_rows")
-                sub_seen = self._pair_bookmark("substr_done", "anchor_rows")
-                incremental = (
-                    self.catalog.exists("substr_pairs") and sub_seen is not None
-                )
-                if not incremental:
-                    cands = candidate_pairs(
-                        anchors,
-                        c.band_pair_cap,
-                        c.band_salt,
-                        materialize=False,  # parquet-backed input IS the pin
-                        collision_broadcast=c.lsh_collision_broadcast,
-                    )
-                    # same write-committed/bookmark-missing kill-window
-                    # defence as build_candidates
-                    if self.catalog.exists("substr_pairs"):
-                        cands = cands.join(
-                            self._read("substr_pairs").select("url_a", "url_b"),
-                            ["url_a", "url_b"], "left_anti",
-                        )
-                else:
-                    cands = self._bucket_diff_pairs(
-                        "anchor_rows", anchors, sub_seen, "substr_pairs"
-                    )
+            def build_substr(f: Frontier) -> DataFrame:
                 # pin the (url_a, url_b) pair keys: the prune + LCS-verify
                 # chain below consumes them through pair_endpoints (x2),
                 # two attach joins, and an anti-join — and AQE runs its
@@ -639,7 +558,7 @@ class DedupPipeline:
                 # parallel threads, each RE-DERIVING the whole bucket-diff
                 # self-join + dropDuplicates otherwise (profiled: four
                 # concurrent ~10 s jobs, half the tick wall at 100k docs)
-                cands = cands.select("url_a", "url_b").localCheckpoint(eager=True)
+                cands = self._pairs(f).select("url_a", "url_b").localCheckpoint(eager=True)
                 cands = prune_substr_candidates(
                     cands,
                     exclude_pairs=self._read("verified_pairs").filter("is_dup"),
@@ -651,13 +570,12 @@ class DedupPipeline:
                     "has_block"
                 )
 
-            substr_stage = self._stage(
-                "substr_pairs", build_substr, mode="append",
-                deps=["anchor_rows", "verified_pairs"],
+            report.stages.append(
+                self._stage(
+                    "substr_pairs", build_substr, upstream="anchor_rows",
+                    deps=["anchor_rows", "verified_pairs"],
+                )
             )
-            report.stages.append(substr_stage)
-            if not substr_stage.skipped:
-                self._write_pair_bookmark("substr_done", "anchor_rows")
 
         # clustering: tick-incremental connected components (round-4
         # verdict Missing #1 — the last whole-graph per-tick rebuild).

@@ -229,20 +229,17 @@ class CheckpointCatalog:
 
     # -- snapshot file manifest + incremental reads ------------------------
     def current_files(self, name: str) -> list[str]:
-        """The table's data-file basenames — the snapshot manifest.
+        """The table's data-file relative names — the snapshot manifest.
         Metadata only: served from the frags sidecar written at commit
-        time; falls back to a directory listing for a table written
-        outside ``write`` (e.g. a raw append from a killed run)."""
+        time, but only while the commit marker stands. ``write`` removes
+        the marker before it writes, so a table without one may hold
+        data files of a killed write that the sidecar never recorded;
+        its manifest is the directory listing."""
         side = self._frags_sidecar(name)
-        if os.path.exists(side):
+        if os.path.exists(self._marker(name)) and os.path.exists(side):
             with open(side) as f:
                 return json.load(f)
-        if not self.exists(name):
-            return []
-        ds = pads.dataset(self.table_path(name), format="parquet")
-        return sorted(
-            os.path.relpath(f.path, self.table_path(name)) for f in ds.get_fragments()
-        )
+        return list(self._dir_fingerprint(name))
 
     def read_files(self, spark: SparkSession, name: str,
                    files: list[str]) -> DataFrame:

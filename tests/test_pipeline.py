@@ -143,6 +143,9 @@ def test_config_change_invalidates(spark, docs, tmp_path_factory):
         dict(cc_max_iters=0),
         dict(verify_threshold=0.0),
         dict(verify_threshold=1.5),
+        dict(lsh_bands=-32, lsh_rows=-4),   # product still equals num_perm
+        dict(band_salt=0),                  # pmod by zero in hot buckets
+        dict(band_salt=-16),
     ],
 )
 def test_config_rejects_unsafe_settings(bad):
@@ -220,7 +223,7 @@ def test_incremental_tick_appends_only_new_work(spark, docs, tmp_path_factory):
 def test_incremental_tick_substr_appends_frontier_only(spark, corpus, docs, tmp_path_factory):
     """The substr stage was the one expensive per-tick overwrite left
     (30% of the pipeline floor, VERDICT r3 Next #2). With the staged
-    anchor table + substr_done bookmark, tick 2 must (a) anchor only
+    anchor table + substr_pairs_src bookmark, tick 2 must (a) anchor only
     frontier docs, (b) LCS-verify only pairs touching a frontier doc —
     lineage ∝ frontier, not corpus — (c) lose nothing from tick 1 and
     still cover everything a from-scratch run finds, and (d) skip the
@@ -282,11 +285,10 @@ def test_incremental_tick_substr_appends_frontier_only(spark, corpus, docs, tmp_
 
 def test_resume_after_kill_between_pair_write_and_bookmark(spark, docs, tmp_path_factory):
     """Kill window: the candidates/substr parquet write completed but
-    the commit marker and done-bookmark writes did not. On resume the
-    non-incremental branch sees a table with no bookmark — without its
+    the commit marker and bookmark writes did not. On resume the
+    full-build branch sees a table with no bookmark — without its
     anti-join defence it would append the entire pair set AGAIN,
-    silently doubling the table (the per-doc stages always had this
-    defence; the pair stages' full-build branch did not)."""
+    silently doubling the table."""
     import os
     import shutil
 
@@ -301,8 +303,7 @@ def test_resume_after_kill_between_pair_write_and_bookmark(spark, docs, tmp_path
     # simulate the kill: markers + bookmarks gone, tables fully written
     for stage in ("candidates", "substr_pairs"):
         os.remove(os.path.join(root, f"_{stage}_COMMIT.json"))
-    for bookmark in ("candidates_done", "substr_done"):
-        cat.drop_bookmark(bookmark)
+        cat.drop_bookmark(f"{stage}_src")
 
     r2 = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
     by2 = {s.name: s for s in r2.stages}
@@ -506,24 +507,22 @@ def test_cow_write_empty_tick_carries_snapshot_forward(spark, tmp_path_factory):
 
 
 def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
-    """Kill window for the per-doc source bookmarks (r5): a stage's
+    """Kill window for the append stages' source bookmarks: a stage's
     commit landed but its ``<stage>_src`` bookmark write did not. On
-    the next tick ``_doc_frontier`` derives a superset frontier from
-    the stale bookmark; the defence — anti-joining urls found in the
-    stage's OWN files appended since the bookmark's ``self`` manifest
-    (frontier-proportional, never a standing-table distinct) — must
-    keep every per-doc table duplicate-free and the clusters equal to
-    a from-scratch run."""
+    the next tick the stage has no bookmark and takes the full branch;
+    the defence — anti-joining keys found in the stage's own table —
+    must keep every append table duplicate-free and the clusters equal
+    to a from-scratch run."""
     root = str(tmp_path_factory.mktemp("docbm"))
     cfg = DedupConfig()
     tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(tick1_docs)
 
     # simulate the kill: the tick-1 stage commits exist, but every
-    # per-doc source bookmark is stale (here: gone entirely)
+    # append stage's source bookmark is stale (here: gone entirely)
     cat = CheckpointCatalog(root)
-    for stage in ("exact_sigs", "minhash_sigs", "band_rows",
-                  "anchor_rows", "verified_pairs"):
+    for stage in ("exact_sigs", "exact_edges", "minhash_sigs", "band_rows",
+                  "candidates", "verified_pairs", "anchor_rows", "substr_pairs"):
         cat.drop_bookmark(f"{stage}_src")
 
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
@@ -533,8 +532,11 @@ def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
     for stage in ("band_rows", "anchor_rows"):
         t = cat.read(spark, stage)
         assert t.count() == t.select("url", "band_id", "band_hash").distinct().count(), stage
-    vp = cat.read(spark, "verified_pairs")
-    assert vp.count() == vp.select("url_a", "url_b").distinct().count()
+    for stage in ("candidates", "verified_pairs", "substr_pairs"):
+        t = cat.read(spark, stage)
+        assert t.count() == t.select("url_a", "url_b").distinct().count(), stage
+    ee = cat.read(spark, "exact_edges")
+    assert ee.count() == ee.select("src", "dst").distinct().count()
 
     scratch = str(tmp_path_factory.mktemp("docbm-scratch"))
     DedupPipeline(spark, CheckpointCatalog(scratch), cfg, with_substr=True).run(docs)
@@ -566,3 +568,39 @@ def test_doc_bookmark_stale_after_commit_skip(spark, docs, tmp_path_factory):
     mh = cat.read(spark, "minhash_sigs")
     assert mh.count() == mh.select("url").distinct().count()
     assert mh.count() == cat.read(spark, "valid_docs").count()
+
+
+@pytest.mark.parametrize(
+    "stage, keys", [("minhash_sigs", ["url"]), ("candidates", ["url_a", "url_b"])]
+)
+def test_resume_after_kill_between_append_and_manifest(
+    spark, docs, tmp_path_factory, monkeypatch, stage, keys
+):
+    """Kill window inside the catalog write: Spark's append landed, but
+    the run died before the catalog recorded the table's file manifest
+    (``_record_lineage``) and commit marker. The frags sidecar still
+    lists the previous commit's files only, so the rerun must take the
+    uncommitted table's manifest from its directory: otherwise the
+    ``self``-manifest defence misses the killed run's files and
+    appends their rows a second time."""
+    root = str(tmp_path_factory.mktemp("killappend"))
+    cfg = DedupConfig()
+    tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
+    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(tick1_docs)
+
+    record = CheckpointCatalog._record_lineage
+
+    def killed(self, name, *args, **kwargs):
+        if name == stage:
+            monkeypatch.setattr(CheckpointCatalog, "_record_lineage", record)
+            raise RuntimeError(f"killed in {name}")
+        return record(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointCatalog, "_record_lineage", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
+    assert CheckpointCatalog(root).commit_info(stage) is None
+
+    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
+    t = CheckpointCatalog(root).read(spark, stage)
+    assert t.count() == t.select(*keys).distinct().count()
