@@ -29,6 +29,14 @@ def _cluster_partition(rows):
     return {frozenset(v) for v in by_label.values() if len(v) > 1}
 
 
+def _rows(spark, cat, table):
+    """The table's rows as a sorted list of tuples (a multiset)."""
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in cat.read(spark, table).collect()
+    )
+
+
 def test_cluster_equivalence_vs_truth(spark, corpus, ran):
     cat, pipe, report = ran
     got = _cluster_partition(cat.read(spark, "clusters").collect())
@@ -511,18 +519,20 @@ def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
     commit landed but its ``<stage>_src`` bookmark write did not. On
     the next tick the stage has no bookmark and takes the full branch;
     the defence — anti-joining keys found in the stage's own table —
-    must keep every append table duplicate-free and the clusters equal
-    to a from-scratch run."""
+    must keep every append table duplicate-free, and clusters and
+    dup_report (whose bookmarks are dropped too) equal to a
+    from-scratch run."""
     root = str(tmp_path_factory.mktemp("docbm"))
     cfg = DedupConfig()
     tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(tick1_docs)
 
     # simulate the kill: the tick-1 stage commits exist, but every
-    # append stage's source bookmark is stale (here: gone entirely)
+    # frontier-fed stage's source bookmark is stale (here: gone entirely)
     cat = CheckpointCatalog(root)
     for stage in ("exact_sigs", "exact_edges", "minhash_sigs", "band_rows",
-                  "candidates", "verified_pairs", "anchor_rows", "substr_pairs"):
+                  "candidates", "verified_pairs", "anchor_rows", "substr_pairs",
+                  "clusters", "dup_report"):
         cat.drop_bookmark(f"{stage}_src")
 
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
@@ -545,6 +555,9 @@ def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
         CheckpointCatalog(scratch).read(spark, "clusters").collect()
     )
     assert got == want
+    assert _rows(spark, cat, "dup_report") == _rows(
+        spark, CheckpointCatalog(scratch), "dup_report"
+    )
 
 
 def test_doc_bookmark_stale_after_commit_skip(spark, docs, tmp_path_factory):
@@ -604,3 +617,48 @@ def test_resume_after_kill_between_append_and_manifest(
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
     t = CheckpointCatalog(root).read(spark, stage)
     assert t.count() == t.select(*keys).distinct().count()
+
+
+@pytest.mark.parametrize(
+    "method, target",
+    [("write", "dup_report"), ("write_bookmark", "dup_report_src"),
+     ("write_bookmark", "clusters_src")],
+)
+def test_killed_tick_clusters_and_report_equal_scratch(
+    spark, docs, ran, tmp_path_factory, monkeypatch, method, target
+):
+    """Tick 0 over one third of the docs; tick 1 over two thirds, killed
+    at one write of the clusters → dup_report tail (the report's commit,
+    or the clusters or report bookmark after its stage committed); tick
+    2 over all docs. The report must rebuild every cluster changed since
+    the report's own last commit, not only those the last clusters run
+    changed, so clusters AND dup_report equal a from-scratch run."""
+    root = str(tmp_path_factory.mktemp("killtick"))
+    cfg = DedupConfig()
+    third = F.pmod(F.xxhash64("url"), F.lit(3))
+    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(
+        docs.filter(third == 0)
+    )
+
+    orig = getattr(CheckpointCatalog, method)
+
+    def killed(self, *args, **kwargs):
+        if (args[1] if method == "write" else args[0]) == target:
+            raise RuntimeError(f"killed at {method}({target})")
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointCatalog, method, killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(
+            docs.filter(third <= 1)
+        )
+    monkeypatch.setattr(CheckpointCatalog, method, orig)
+
+    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
+    # ``ran`` is the module's scratch run over all docs; its substring
+    # pass feeds neither clusters nor dup_report
+    cat, scat = CheckpointCatalog(root), ran[0]
+    for table in ("clusters", "dup_report"):
+        got, want = _rows(spark, cat, table), _rows(spark, scat, table)
+        assert got == want, (table, len(got), len(want),
+                             len(set(want) - set(got)), len(set(got) - set(want)))
