@@ -772,12 +772,13 @@ def cmd_exactsubstr_strip(args) -> dict:
     losers with the span removed (winners keep the block)."""
     spark = _spark(args)
     from .operators.exactsubstr import shared_blocks, strip_shared_blocks
-    from .operators.suffix import substr_pairs
+    from .operators.suffix import substr_candidates
 
     docs, sampled = _maybe_sample(spark.read.parquet(args.input))
     docs = docs.select(F.col(args.url_col).alias("url"),
                        F.col(args.text_col).alias("text"))
-    pairs = substr_pairs(docs, min_len=args.min_len).select("url_a", "url_b")
+    # shared_blocks is the verification: one LCS per candidate
+    pairs = substr_candidates(docs, min_len=args.min_len)
     blocks = shared_blocks(pairs, docs, min_len=args.min_len)
     out = strip_shared_blocks(docs, blocks)
     out.write.mode("overwrite").parquet(args.output)

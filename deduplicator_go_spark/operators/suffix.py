@@ -167,8 +167,8 @@ def verify_substr_pairs(
 
 def prune_substr_candidates(
     cands: DataFrame,
-    exclude_pairs: DataFrame | None = None,
-    sigs: DataFrame | None = None,
+    exclude_pairs: DataFrame,
+    sigs: DataFrame,
 ) -> DataFrame:
     """Pre-verify pruning (the reference's size-blocking shape —
     expensive compute only where cheap keys collide,
@@ -178,28 +178,41 @@ def prune_substr_candidates(
     - ``sigs`` (url, content_sha) drops candidates whose contents are
       byte-identical (exact dup groups trivially share every block).
     Both classes are already clustered upstream; re-running LCS on them
-    is the dominant wasted cost otherwise. Shared by the one-shot
-    ``substr_pairs`` and the pipeline's tick-incremental substr stage."""
-    if exclude_pairs is not None:
-        cands = cands.join(
-            exclude_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
-        )
-    if sigs is not None:
-        from .verify import pair_endpoints
+    is the dominant wasted cost otherwise. Its one caller is the
+    pipeline's substr stage (plans/pipeline.py), which has both tables."""
+    from .verify import pair_endpoints
 
-        # semi-prune the sha table to the candidate endpoints — on an
-        # incremental tick the candidates touch a sliver of the corpus
-        # and the two attach joins must not shuffle every standing sha
-        sha = sigs.select("url", "content_sha").join(
-            pair_endpoints(cands), "url", "left_semi"
-        )
-        cands = (
-            cands.join(sha.withColumnsRenamed({"url": "url_a", "content_sha": "sha_a"}), "url_a")
-            .join(sha.withColumnsRenamed({"url": "url_b", "content_sha": "sha_b"}), "url_b")
-            .filter(F.col("sha_a") != F.col("sha_b"))
-            .select("url_a", "url_b")
-        )
-    return cands
+    cands = cands.join(
+        exclude_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
+    )
+    # semi-prune the sha table to the candidate endpoints — on an
+    # incremental tick the candidates touch a sliver of the corpus
+    # and the two attach joins must not shuffle every standing sha
+    sha = sigs.select("url", "content_sha").join(
+        pair_endpoints(cands), "url", "left_semi"
+    )
+    return (
+        cands.join(sha.withColumnsRenamed({"url": "url_a", "content_sha": "sha_a"}), "url_a")
+        .join(sha.withColumnsRenamed({"url": "url_b", "content_sha": "sha_b"}), "url_b")
+        .filter(F.col("sha_a") != F.col("sha_b"))
+        .select("url_a", "url_b")
+    )
+
+
+def substr_candidates(
+    docs: DataFrame,
+    min_len: int = 512,
+    anchor_k: int = 64,
+    anchor_mod: int = 16,
+) -> DataFrame:
+    """→ (url_a, url_b): the anchor-blocked pairs that may share a block
+    of >= ``min_len`` characters, unverified."""
+    # docs shorter than min_len cannot hold a qualifying block
+    # (LCS <= min(len)): dropping them up front removes their anchor
+    # explode and candidate shuffle entirely
+    docs = docs.filter(F.length("text") >= min_len)
+    anchors = anchor_table(docs, anchor_k, anchor_mod)
+    return candidate_pairs(anchors).select("url_a", "url_b")
 
 
 def substr_pairs(
@@ -207,11 +220,6 @@ def substr_pairs(
     min_len: int = 512,
     anchor_k: int = 64,
     anchor_mod: int = 16,
-    pair_cap: int = 64,
-    salt: int = 16,
-    exclude_pairs: DataFrame | None = None,
-    sigs: DataFrame | None = None,
-    collision_broadcast: bool = True,
 ) -> DataFrame:
     """Full substring pass: anchors → blocked candidates → exact verify.
 
@@ -219,13 +227,6 @@ def substr_pairs(
     stage runs the same three steps tick-incrementally over a staged
     anchor table (plans/pipeline.py) so a daily ingest never re-anchors
     or re-verifies the standing corpus."""
-    # docs shorter than min_len cannot hold a qualifying block
-    # (LCS <= min(len)): dropping them up front removes their anchor
-    # explode, candidate shuffle, and text-attach join entirely
+    cands = substr_candidates(docs, min_len, anchor_k, anchor_mod)
     docs = docs.filter(F.length("text") >= min_len)
-    anchors = anchor_table(docs, anchor_k, anchor_mod)
-    cands = candidate_pairs(
-        anchors, pair_cap, salt, collision_broadcast=collision_broadcast
-    ).select("url_a", "url_b")
-    cands = prune_substr_candidates(cands, exclude_pairs, sigs)
     return verify_substr_pairs(cands, docs, min_len).filter("has_block")

@@ -17,8 +17,11 @@ Stage graph (each box = a committed catalog table + lineage rows;
 Resume contract (north rule; generalizes the reference's keyset
 bookmarks, /root/reference/files/hash.go:202-283): a killed run
 re-invoked with the same catalog + config skips every stage whose
-commit marker matches the config's params_hash AND whose upstream
-row-count fingerprint is unchanged.
+commit marker matches the config's params_hash AND whose ``<stage>_src``
+bookmark (below) records exactly the current file manifest of each of
+its producers (for valid_docs: the input fingerprint). The bookmark is
+the one record of what a stage consumed: it decides both the skip and
+the frontier.
 
 Tick contract (the reference's operating model — a 1-minute timer over
 a ``hash IS NULL`` work queue, systemd/deduplicator-hash.timer:5-8,
@@ -35,14 +38,16 @@ dup_report recomputes the report rows of every id (cluster_id or url)
 found in the clusters buckets rewritten since its bookmark and carries
 the other rows over.
 
-Frontier protocol: every stage fed by another stage's table keeps one
-``<stage>_src`` bookmark, ``{params_hash, <each upstream>: files,
-self: files}``: the eight append stages (exact_sigs, exact_edges,
-minhash_sigs, band_rows, candidates, verified_pairs, anchor_rows,
-substr_pairs), clusters (upstreams verified_pairs, exact_edges and
-valid_docs) and dup_report (upstream clusters). ``_stage`` writes it
-after the stage's commit; ``_frontier`` alone reads it. Without a
-valid one, a stage takes each whole upstream: an append stage
+Frontier protocol: every stage keeps one ``<stage>_src`` bookmark,
+``{params_hash, <each upstream>: files, self: files}``: the eight
+append stages (exact_sigs, exact_edges, minhash_sigs, band_rows,
+candidates, verified_pairs, anchor_rows, substr_pairs — whose
+upstreams are anchor_rows and verified_pairs), clusters (upstreams
+verified_pairs, exact_edges and valid_docs) and dup_report (upstream
+clusters); valid_docs records ``input: [rows, url-hash sum]`` in place
+of upstream files. ``_stage`` writes it after the stage's commit and
+reads it once to decide the skip and the frontier (``_frontier``).
+Without a valid one, a stage takes each whole upstream: an append stage
 anti-joins it against its whole own table, clusters and dup_report
 rebuild and overwrite.
 
@@ -167,66 +172,63 @@ class DedupPipeline:
         ).hexdigest()[:16]
 
     # -- stage runner -----------------------------------------------------
-    def _deps_fingerprint(self, deps: list[str], extra: dict | None = None) -> dict:
-        """Upstream state as {table: rows} from commit markers / parquet
-        footers — metadata only, no scan jobs. On Iceberg this is the
-        upstream snapshot-id set; row counts are the parquet-dir
-        stand-in with the same contract (append-only tables only grow)."""
-        return {**{d: self.catalog.table_rows(d) for d in deps}, **(extra or {})}
-
     def _stage(self, name: str, build, mode: str = "append",
-               deps: list[str] | None = None,
-               extra_deps: dict | None = None,
                partition_by: list[str] | None = None,
-               upstream: str | tuple[str, ...] | None = None) -> StageResult:
-        """Run one stage unless its commit already covers the current
-        upstream. ``mode="append"`` is the frontier-driven form: re-invoked
-        on a grown upstream it appends only the frontier's rows, reusing
-        partial output from a killed run when params match. Every stage's
-        table is wiped first if it was built under other params
-        (``incremental_begin``), so a table that exists here was built
-        under these params.
+               upstream: str | tuple[str, ...] = (),
+               input_fp: list | None = None) -> StageResult:
+        """Run one stage unless its bookmark shows it has consumed the
+        current upstream. ``mode="append"`` is the frontier-driven form:
+        re-invoked on a grown upstream it appends only the frontier's
+        rows, reusing partial output from a killed run when params match.
+        Every stage's table is wiped first if it was built under other
+        params (``incremental_begin``), so a table that exists here was
+        built under these params.
 
-        ``upstream`` names the producers of a frontier-fed stage: ``build``
-        then receives the stage's ``Frontier`` (``deps`` default to the
-        producers), and after the stage's own commit its ``<name>_src``
-        bookmark records (each producer's manifest processed, own
-        manifest at commit). A ``cow`` write needs that bookmark's base:
-        without it the stage overwrites. A kill between the commit and
-        the bookmark leaves a stale bookmark whose only cost is a wider
-        frontier (see ``_frontier``)."""
-        ups = (upstream,) if isinstance(upstream, str) else upstream or ()
-        up = self._deps_fingerprint(deps or list(ups), extra_deps)
-        if self.catalog.is_complete(name, self.ph, upstream_rows=up):
-            info = self.catalog.commit_info(name)
-            return StageResult(name, skipped=True, rows=info.rows, wall_ms=0)
+        ``upstream`` names the producers of a frontier-fed stage, whose
+        ``build`` receives the stage's ``Frontier``; ``input_fp`` is the
+        raw input's fingerprint for valid_docs, whose ``build`` takes no
+        argument. After the commit, the ``<name>_src`` bookmark records
+        what the stage consumed (each producer's manifest, or the input
+        fingerprint) and its own manifest; the stage is skipped while its
+        commit carries these params and that record equals the current
+        upstream. A ``cow`` write needs the bookmark's base: without it
+        the stage overwrites. A kill before the bookmark write re-runs
+        the stage once, over a wider frontier (see ``_frontier``)."""
+        ups = (upstream,) if isinstance(upstream, str) else upstream
+        consumed = {u: self.catalog.current_files(u) for u in ups}
+        if input_fp is not None:
+            consumed["input"] = input_fp
+        bm = self.catalog.read_bookmark(f"{name}_src")
+        if (bm is not None and bm.get("params_hash") == self.ph
+                and self.catalog.is_complete(name, self.ph)
+                and all(bm.get(k) == v for k, v in consumed.items())):
+            return StageResult(name, skipped=True, rows=self.catalog.table_rows(name), wall_ms=0)
         t0 = time.time()
         self.catalog.incremental_begin(name, self.ph)
         if ups:
-            f = self._frontier(name, ups)
+            f = self._frontier(name, ups, bm)
             if mode == "cow" and not f.incremental:
                 mode = "overwrite"
             df = build(f)
         else:
             df = build()
         info = self.catalog.write(df, name, self.ph, mode=mode,
-                                  partition_by=partition_by, upstream_rows=up)
-        if ups:
-            self.catalog.write_bookmark(
-                f"{name}_src",
-                {"params_hash": self.ph,
-                 **{u: self.catalog.current_files(u) for u in ups},
-                 "self": self.catalog.current_files(name)},
-            )
+                                  partition_by=partition_by)
+        self.catalog.write_bookmark(
+            f"{name}_src",
+            {"params_hash": self.ph, **consumed,
+             "self": self.catalog.current_files(name)},
+        )
         self._release_persisted()
         return StageResult(name, skipped=False, rows=info.rows, wall_ms=int((time.time() - t0) * 1000))
 
     def _read(self, name: str) -> DataFrame:
         return self.catalog.read(self.spark, name)
 
-    def _frontier(self, name: str, ups: tuple[str, ...]) -> Frontier:
-        """The work left for stage ``name``, from its ``<name>_src``
-        bookmark (the Iceberg incremental-snapshot-read shape).
+    def _frontier(self, name: str, ups: tuple[str, ...], bm: dict | None) -> Frontier:
+        """The work left for stage ``name``, from ``bm``, its
+        ``<name>_src`` bookmark (the Iceberg incremental-snapshot-read
+        shape).
 
         With a bookmark stamped under these params, ``new`` holds ONLY
         each producer's files written since it — never the standing
@@ -246,7 +248,6 @@ class DedupPipeline:
         Without a valid bookmark (first run, params change, a killed
         first run, a pre-bookmark catalog), ``new`` holds each whole
         producer table and ``done`` the whole own table, if it exists."""
-        bm = self.catalog.read_bookmark(f"{name}_src")
         if (bm is not None and bm.get("params_hash") == self.ph
                 and self.catalog.exists(name)):
             return Frontier(
@@ -283,18 +284,12 @@ class DedupPipeline:
             return f.drop_done(pairs, ["url_a", "url_b"])
         # the appended rows ARE the frontier's band memberships — both
         # the frontier urls and the touched buckets come straight from
-        # them (one small materialization), so the only standing-table
-        # pass left is the members semi-join below. Round-5 profile:
-        # deriving new_buckets via a second full-bands semi-join cost an
-        # extra standing scan per tick.
-        new_rows = (
-            f.rows.select("url", "band_id", "band_hash")
-            .localCheckpoint(eager=True)
-        )
-        new_urls = new_rows.select("url").distinct()
-        new_buckets = new_rows.select("band_id", "band_hash").distinct()
+        # them (parquet-backed: the appended files are the pin), so the
+        # only standing-table pass left is the members semi-join below.
+        # Round-5 profile: deriving the touched buckets via a second
+        # full-bands semi-join cost an extra standing scan per tick.
         members = self._read(f.upstream).join(
-            new_buckets, ["band_id", "band_hash"], "left_semi"
+            f.rows.select("band_id", "band_hash"), ["band_id", "band_hash"], "left_semi"
         )
         pairs = candidate_pairs(
             members,
@@ -302,15 +297,13 @@ class DedupPipeline:
             c.band_salt,
             materialize=True,
             collision_broadcast=c.lsh_collision_broadcast,
-        ).localCheckpoint(eager=True)  # feeds two semi-joins below
+        )
+        # a pair touches the frontier on either endpoint: one semi-join
+        # over both, and a pair with two new endpoints appears twice
         touches_new = (
-            pairs.join(new_urls.withColumnRenamed("url", "url_a"), "url_a", "left_semi")
+            pairs.withColumn("url", F.explode(F.array("url_a", "url_b")))
+            .join(f.rows.select("url"), "url", "left_semi")
             .select("url_a", "url_b", "origin")
-            .unionByName(
-                pairs.join(
-                    new_urls.withColumnRenamed("url", "url_b"), "url_b", "left_semi"
-                ).select("url_a", "url_b", "origin")
-            )
             .dropDuplicates(["url_a", "url_b"])
         )
         return f.drop_done(touches_new, ["url_a", "url_b"])
@@ -352,7 +345,7 @@ class DedupPipeline:
         stage recomputes only buckets whose membership changed — a
         daily ingest at 10^12 docs never re-bands or re-verifies the
         standing corpus. Whole-graph stages (edges, clusters, report)
-        recompute when their upstream fingerprints moved.
+        recompute when their producers' manifests moved.
         """
         # tick mode = a prior invocation completed the whole graph under
         # these params; a resume of a killed FIRST run stays in scratch
@@ -389,9 +382,9 @@ class DedupPipeline:
         # and partial-aggregates map-side (no extra shuffle — unlike a
         # distinct-XOR which would add an Expand + shuffle). In-place
         # text edits under an unchanged url set remain outside the
-        # append-only contract (module docstring). Everything
-        # downstream keys off catalog table row counts from commit
-        # markers — metadata only.
+        # append-only contract (module docstring). Every stage
+        # downstream keys off its producers' file manifests — metadata
+        # only.
         fp_row = docs.agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("url").cast("decimal(38,0)")).alias("s"),
@@ -417,10 +410,8 @@ class DedupPipeline:
             return exact.valid_documents(frontier, c.min_text_chars, c.langs).select(*cols)
 
         report.stages.append(
-            self._stage(
-                "valid_docs", build_valid,
-                extra_deps={"input_rows": input_rows, "input_urlsig": input_urlsig},
-            )
+            self._stage("valid_docs", build_valid,
+                        input_fp=[input_rows, input_urlsig])
         )
         valid = self._read("valid_docs")
 
@@ -569,8 +560,8 @@ class DedupPipeline:
                 cands = self._pairs(f).select("url_a", "url_b").localCheckpoint(eager=True)
                 cands = prune_substr_candidates(
                     cands,
-                    exclude_pairs=self._read("verified_pairs").filter("is_dup"),
-                    sigs=self._read("exact_sigs"),
+                    self._read("verified_pairs").filter("is_dup"),
+                    self._read("exact_sigs"),
                 ).localCheckpoint(eager=True)  # same multi-consumer rule:
                 # feeds pair_endpoints (x2) + the text-attach join
                 docs_long = valid.filter(F.length("text") >= c.substr_min_len)
@@ -578,10 +569,11 @@ class DedupPipeline:
                     "has_block"
                 )
 
+            # verified_pairs is a producer too: the prune reads all of it
             report.stages.append(
                 self._stage(
-                    "substr_pairs", build_substr, upstream="anchor_rows",
-                    deps=["anchor_rows", "verified_pairs"],
+                    "substr_pairs", build_substr,
+                    upstream=("anchor_rows", "verified_pairs"),
                 )
             )
 

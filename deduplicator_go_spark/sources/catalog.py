@@ -5,9 +5,11 @@ Generalizes the reference's resume contract — keyset bookmarks +
 ``hash IS NULL`` work-queue predicates (/root/reference/files/
 hash.go:202-283) and batched transactions (find.go:125, prune.go:44)
 — into Spark-native terms: each stage writes its whole output, then a
-commit marker stamped with the config's params_hash; a killed job
-rerun skips every committed stage and (for incremental stages)
-anti-joins the frontier against its own completed output.
+commit marker stamped with the config's params_hash, then a consumer
+bookmark of the producer manifests it read; a killed job rerun skips
+every committed stage whose bookmark still matches and (for
+incremental stages) anti-joins the frontier against its own completed
+output.
 
 On a production cluster this catalog is an Iceberg/Delta catalog
 (atomic snapshot commits, hidden partitioning); those jars are not in
@@ -23,13 +25,12 @@ so an Iceberg backend is a drop-in):
   removed first, written last — same crash window as a snapshot swap).
 - ``write(mode="append")``     → fast-append snapshot commit (here:
   parquet append; the params sidecar written by ``incremental_begin``
-  plays the role of table properties stamped on the first append).
+  plays the role of table properties stamped on the first append). An
+  append of zero rows adds no data file to a table that has one, so
+  its manifest, and every consumer's bookmark test, stays unchanged.
 - commit marker (``_*_COMMIT.json``) → the snapshot id + summary; a
   table without a current marker is a mid-write table (resume wipes or
   frontier-fills it, never trusts it).
-- ``upstream_rows`` fingerprint in ``is_complete`` → upstream snapshot
-  id comparison (snapshot diff); row counts are the parquet stand-in
-  with the same semantics under the append-only contract.
 - ``table_rows`` → ``snapshot.summary["total-records"]`` (here:
   parquet footers; metadata either way, never a scan job).
 - ``CommitInfo.schema`` → the table schema in Iceberg's table
@@ -57,7 +58,9 @@ so an Iceberg backend is a drop-in):
   emitted only for the NEW files (manifest entries), so per-tick
   lineage is proportional to the touched partitions.
 - ``write_bookmark`` / ``read_bookmark`` → consumer-side snapshot ids
-  stored as table properties (here: an atomic JSON sidecar).
+  stored as table properties (here: an atomic JSON sidecar). A consumer
+  whose bookmark still equals each producer's manifest has consumed the
+  current upstream and is skipped (snapshot diff: nothing new).
 
 Lineage rows are per output *file* (the local stand-in for a
 partition): (run_id, stage, partition, rows, bytes, wall_ms,
@@ -87,11 +90,6 @@ class CommitInfo:
     rows: int
     wall_ms: int
     completed_at: float
-    # upstream table row counts at commit time (the snapshot-diff
-    # stand-in): a stage whose upstream grew since its commit is stale
-    # even under identical params. None = recorded before this field
-    # existed (treated as unknown → stale when a check is requested).
-    upstream_rows: dict | None = None
     # the written Spark schema as JSON: data columns in DataFrame
     # order, partition columns last (the order a parquet read gives).
     # None = recorded before this field existed (reads infer it).
@@ -132,24 +130,15 @@ class CheckpointCatalog:
         if not os.path.exists(m):
             return None
         with open(m) as f:
-            return CommitInfo(**json.load(f))
+            fields = json.load(f)
+        # older markers also carry upstream row counts: ignored
+        return CommitInfo(**{k: v for k, v in fields.items()
+                             if k in CommitInfo.__dataclass_fields__})
 
-    def is_complete(
-        self,
-        name: str,
-        params_hash: str,
-        upstream_rows: dict | None = None,
-    ) -> bool:
-        """Committed under these params — and, when ``upstream_rows`` is
-        given, committed against exactly this upstream state (row-count
-        fingerprint per dependency table; on Iceberg this is a snapshot
-        id comparison)."""
+    def is_complete(self, name: str, params_hash: str) -> bool:
+        """Committed under these params."""
         info = self.commit_info(name)
-        if info is None or info.params_hash != params_hash:
-            return False
-        if upstream_rows is not None and info.upstream_rows != upstream_rows:
-            return False
-        return True
+        return info is not None and info.params_hash == params_hash
 
     def _dir_fingerprint(self, name: str) -> tuple:
         """Sorted relative names of the table's data files, from a local
@@ -272,8 +261,9 @@ class CheckpointCatalog:
     # processed (plus its params hash) — the snapshot-id bookmark of an
     # Iceberg incremental read. Written AFTER the consumer's own commit;
     # a kill in between leaves a stale bookmark, which is safe: the next
-    # run re-derives a superset frontier and idempotent anti-joins /
-    # relabels absorb the overlap.
+    # run finds it behind the producers, re-runs the consumer over a
+    # superset frontier, and idempotent anti-joins / relabels absorb the
+    # overlap.
     def _bookmark(self, name: str) -> str:
         return os.path.join(self.root, f"_{name}_BOOKMARK.json")
 
@@ -325,7 +315,6 @@ class CheckpointCatalog:
         params_hash: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-        upstream_rows: dict | None = None,
     ) -> CommitInfo:
         """Write a stage output + commit marker + lineage rows.
 
@@ -413,10 +402,23 @@ class CheckpointCatalog:
                 shutil.rmtree(path)
             os.rename(tmp, path)
         elif mode == "append":
+            before = set(self._dir_fingerprint(name))
             w = df.write.mode("append")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
+            # an empty DataFrame writes one zero-row file: it stays only
+            # as a table's one data file (its schema); otherwise it would
+            # move the manifest and re-run every consumer for nothing
+            files = self._dir_fingerprint(name)
+            empty = [b for b in files if b not in before
+                     and papq.read_metadata(os.path.join(path, b)).num_rows == 0]
+            if len(empty) < len(files):
+                for b in empty:
+                    head, tail = os.path.split(os.path.join(path, b))
+                    for fn in (tail, f".{tail}.crc"):
+                        if os.path.exists(os.path.join(head, fn)):
+                            os.remove(os.path.join(head, fn))
         else:
             raise ValueError(mode)
 
@@ -436,7 +438,6 @@ class CheckpointCatalog:
             rows=rows,
             wall_ms=wall_ms,
             completed_at=time.time(),
-            upstream_rows=upstream_rows,
             schema=schema.json(),
         )
         with open(marker + ".tmp", "w") as f:

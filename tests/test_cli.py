@@ -572,3 +572,40 @@ def test_cli_trap_scan_and_host_cap(capsys, spark, tmp_path):
     assert out["kept_pages"] == 12 + 5 and out["hosts"] == 6
     kept = spark.read.parquet(op2)
     assert kept.filter("host = 'trap.com'").count() == 12
+
+
+def test_cli_exactsubstr_strip(capsys, spark, tmp_path):
+    """exactsubstr-strip cuts a planted shared block out of the larger
+    url only; a doc sharing a block shorter than --min-len, and a doc
+    sharing none, are left as they were."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(7)
+
+    def words(n):
+        return " ".join(
+            "".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 8)))
+            for _ in range(n)
+        )
+
+    block = words(80)
+    texts = {
+        "u0": "X" + words(30) + " " + block + " Z" + words(30),
+        "u1": block + " Q" + words(40),
+        "u2": words(120),
+        "u3": words(30) + " " + block[:150] + " W" + words(20),
+    }
+    p = str(tmp_path / "docs.parquet")
+    pd.DataFrame({"url": list(texts), "text": list(texts.values())}).to_parquet(p)
+    outp = str(tmp_path / "stripped.parquet")
+    out = _run(capsys, ["--catalog", str(tmp_path / "cat"), "--cores", "8",
+                        "exactsubstr-strip", "--input", p, "--output", outp,
+                        "--min-len", "200"])
+    assert (out["docs"], out["docs_rewritten"]) == (4, 1)
+    # the block plus the space after it in both docs
+    assert out["chars_removed"] == len(block) + 1
+    got = {r["url"]: r["text"] for r in spark.read.parquet(outp).collect()}
+    assert got["u1"] == texts["u1"][len(block) + 1:]
+    assert all(got[u] == texts[u] for u in ("u0", "u2", "u3"))

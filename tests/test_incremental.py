@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from deduplicator_go_spark.sources.catalog import CheckpointCatalog
@@ -264,3 +266,26 @@ def test_append_with_mismatched_schema_raises(spark, tmp_path):
     cat.write(spark.createDataFrame([("u1", "1")], "url string, n string"),
               "c", params_hash="p")
     assert cat.read(spark, "c").columns == ["url", "n"]
+
+
+def test_empty_append_leaves_manifest_unchanged(spark, tmp_path):
+    """An append of zero rows leaves no data file in a table that has
+    one, so the manifest that consumers' bookmarks compare against is
+    unchanged; the first write of a table keeps its empty file, so the
+    table still reads with its schema."""
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    empty = spark.createDataFrame([], "url string, n long")
+    cat.write(empty, "t", params_hash="p", mode="append")
+    assert len(cat.current_files("t")) == 1
+    assert cat.read(spark, "t").columns == ["url", "n"]
+    assert cat.table_rows("t") == 0
+
+    cat.write(spark.range(10).selectExpr("cast(id as string) url", "id n"), "t",
+              params_hash="p", mode="append")
+    files = cat.current_files("t")
+    listing = sorted(os.listdir(cat.table_path("t")))
+    cat.write(empty, "t", params_hash="p", mode="append")
+    assert cat.current_files("t") == files
+    assert cat.table_rows("t") == 10
+    # nothing left over, checksum sidecars included
+    assert sorted(os.listdir(cat.table_path("t"))) == listing

@@ -561,26 +561,87 @@ def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
 
 
 def test_doc_bookmark_stale_after_commit_skip(spark, docs, tmp_path_factory):
-    """The subtler window: stage committed, bookmark lost, and the NEXT
-    run skips the stage (upstream unchanged) so the bookmark is never
-    rewritten. The tick after that (upstream grown) must still derive
-    a correct frontier from the stale bookmark and append exactly the
-    new docs, no duplicates."""
+    """Stage committed, bookmark lost, upstream unchanged: the bookmark
+    is the record of what the stage consumed, so the NEXT run re-runs
+    the stage once over the whole upstream, appends nothing (the
+    frontier anti-join), writes the bookmark back and leaves the
+    stage's manifest, and so its consumer's skip, as it was. The tick
+    after that (upstream grown) appends exactly the new docs, no
+    duplicates."""
     root = str(tmp_path_factory.mktemp("docbm2"))
     cfg = DedupConfig()
     tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(tick1_docs)
     cat = CheckpointCatalog(root)
+    n1 = cat.commit_info("minhash_sigs").rows
     cat.drop_bookmark("minhash_sigs_src")
 
-    # unchanged re-run: minhash skips, bookmark stays absent
     r2 = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(tick1_docs)
-    assert {s.name: s.skipped for s in r2.stages}["minhash_sigs"]
+    by2 = {s.name: s for s in r2.stages}
+    assert not by2["minhash_sigs"].skipped and by2["minhash_sigs"].rows == n1
+    assert cat.read_bookmark("minhash_sigs_src") is not None
+    assert by2["band_rows"].skipped
 
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
     mh = cat.read(spark, "minhash_sigs")
     assert mh.count() == mh.select("url").distinct().count()
     assert mh.count() == cat.read(spark, "valid_docs").count()
+
+
+def _copy_catalog(src, tmp_path_factory, name):
+    """A copy of the catalog at ``src``, to tick without touching it."""
+    import shutil
+
+    root = str(tmp_path_factory.mktemp(name) / "cat")
+    shutil.copytree(src, root)
+    return root
+
+
+def test_blank_docs_tick_skips_after_valid_docs(spark, docs, ran, tmp_path_factory):
+    """A tick whose new docs are all blank changes the input fingerprint
+    but no valid_docs row: valid_docs runs and appends nothing, which
+    leaves no data file behind, so its manifest is unchanged and every
+    later stage skips."""
+    cat = CheckpointCatalog(_copy_catalog(ran[0].root, tmp_path_factory, "blank"))
+    files = cat.current_files("valid_docs")
+    blank = (
+        docs.limit(3)
+        .withColumn("url", F.concat(F.lit("blank-"), F.col("url")))
+        .withColumn("text", F.lit(" \n\t "))
+    )
+    r2 = DedupPipeline(spark, cat, DedupConfig()).run(docs.unionByName(blank))
+    assert [s.name for s in r2.stages if not s.skipped] == ["valid_docs"]
+    assert cat.current_files("valid_docs") == files
+
+
+def test_resume_catalog_with_upstream_row_markers(spark, docs, ran, tmp_path_factory):
+    """A catalog written before the bookmark decided skips: its commit
+    markers carry ``upstream_rows``, valid_docs has no bookmark, and the
+    substr_pairs bookmark lacks its verified_pairs manifest. The first
+    rerun catches up (the stages without a matching bookmark run over
+    empty frontiers) with unchanged outputs; the next skips every
+    stage."""
+    import glob
+    import json
+
+    cat = CheckpointCatalog(_copy_catalog(ran[0].root, tmp_path_factory, "oldmarkers"))
+    for marker in glob.glob(f"{cat.root}/_*_COMMIT.json"):
+        with open(marker) as f:
+            info = json.load(f)
+        with open(marker, "w") as f:
+            json.dump({**info, "upstream_rows": {"valid_docs": info["rows"]}}, f)
+    cat.drop_bookmark("valid_docs_src")
+    bm = cat.read_bookmark("substr_pairs_src")
+    del bm["verified_pairs"]
+    cat.write_bookmark("substr_pairs_src", bm)
+    tables = [s.name for s in ran[2].stages]
+    want = {t: _rows(spark, ran[0], t) for t in tables}
+
+    r1 = DedupPipeline(spark, CheckpointCatalog(cat.root), DedupConfig()).run(docs)
+    assert [s.name for s in r1.stages if not s.skipped] == ["valid_docs", "substr_pairs"]
+    assert {t: _rows(spark, cat, t) for t in tables} == want
+    r2 = DedupPipeline(spark, CheckpointCatalog(cat.root), DedupConfig()).run(docs)
+    assert all(s.skipped for s in r2.stages), [s.name for s in r2.stages if not s.skipped]
 
 
 @pytest.mark.parametrize(
