@@ -103,7 +103,7 @@ def verify_pairs(
     pipeline passes False there and the attach joins read the
     column-pruned signature table directly.
 
-    Tiered verification when ``sigs`` (url, sig) is provided:
+    Tiered verification when ``sigs`` (url, sig or sig16) is provided:
     signature agreement (native zip_with — JVM-side, scales with the
     shuffle) classifies clear cases, and only the borderline band
     |est - threshold| < est_margin pays the exact shingle-Jaccard
@@ -132,8 +132,8 @@ def verify_pairs(
         )
 
     # prefer the compact packed agreement column when the signature
-    # table carries one (the pipeline writes sig16 alongside sig: four
-    # 16-bit lanes per long). Equal components stay equal, a false
+    # table carries one (the pipeline's table stores sig16 in place of
+    # sig: four 16-bit lanes per long). Equal components stay equal, a false
     # agreement is a deterministic 2^-16 lane collision (est bias
     # ≤ 2^-16, ≪ the tier's 4σ borderline margin), and the two attach
     # joins below decode/shuffle a QUARTER of the sig bytes — this

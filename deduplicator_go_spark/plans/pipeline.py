@@ -97,8 +97,9 @@ from ..sources.catalog import CheckpointCatalog
 # set or meaning), so incremental catalogs written by earlier code
 # generations are wiped instead of appended to with a mixed schema.
 # History: 1 = pre-r5 minhash_sigs (url, sig); 2 = r5 adds
-# bands/sig16 derived columns to minhash_sigs.
-TABLE_SCHEMA_VERSION = 2
+# bands/sig16 derived columns to minhash_sigs; 3 = minhash_sigs stores
+# only (url, bands, sig16): no stage reads the 128-bigint sig.
+TABLE_SCHEMA_VERSION = 3
 
 
 @dataclass
@@ -456,13 +457,12 @@ class DedupPipeline:
         # Partial output from a killed run is only reused when it was
         # computed under the same params (sidecar check), otherwise wiped.
         def build_minhash(f: Frontier) -> DataFrame:
-            # The signature table carries two derived columns computed
-            # in the SAME job that writes it (narrow projections over
-            # the UDF output — no extra scan):
+            # The signature table stores two columns derived from the
+            # 128-bigint sig in the SAME job that writes it (narrow
+            # projections over the UDF output — no extra scan), and
+            # not sig itself, which no stage reads (1 KB/doc):
             #   bands: the lsh band hashes, so the band_rows stage
-            #     explodes a column-pruned 32-bigint array instead of
-            #     re-decoding the 128-bigint sig (4x the bytes; parquet
-            #     decode was the whole cost of that stage);
+            #     explodes a 32-bigint array;
             #   sig16: four 16-bit lanes packed per long (num_perm/4
             #     longs), so the verify stage's signature-agreement
             #     tier decodes/shuffles a QUARTER of the sig bytes —
@@ -475,10 +475,11 @@ class DedupPipeline:
             return minhash_signatures(
                 f.drop_done(f.rows, ["url"]).select("url", "text"),
                 c.shingle_size, c.num_perm, c.minhash_seed,
-            ).withColumns({
-                "bands": band_hash_array(c.lsh_bands, c.lsh_rows),
-                "sig16": packed_sig16(c.num_perm),
-            })
+            ).select(
+                "url",
+                band_hash_array(c.lsh_bands, c.lsh_rows).alias("bands"),
+                packed_sig16(c.num_perm).alias("sig16"),
+            )
 
         report.stages.append(
             self._stage("minhash_sigs", build_minhash, upstream="valid_docs")

@@ -71,6 +71,9 @@ def get_spark(
         # list a few hundred entries at most, which the driver walks in
         # milliseconds; Iceberg reads its manifests the same way.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # a write leaves only its data files: no _SUCCESS marker (the
+        # catalog's commit marker is the table's completion record)
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -78,4 +81,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # and no hidden .crc sidecar per file, which doubled the file count
+    # of every catalog table. The local file system is one cached
+    # instance per JVM, shared by the driver and the local executors.
+    # (Not RawLocalFileSystem as fs.file.impl: getLocal casts the file:
+    # implementation to LocalFileSystem.)
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ).setWriteChecksum(False)
     return spark

@@ -40,6 +40,11 @@ so an Iceberg backend is a drop-in):
   on the driver (``session.get_spark``), so it starts no listing job
   either. An append whose columns differ from it raises, as an
   Iceberg write against a mismatched table schema does.
+- ``CODEC`` → the ``write.parquet.compression-codec`` table property:
+  every data file and lineage file is zstd parquet at the writer's
+  default level, Iceberg's default codec. Files of another codec
+  already in a table read as before (parquet records the codec per
+  column chunk).
 - lineage rows per output file → per-data-file manifest entries plus
   the engine's (run_id, stage, wall_ms, params_hash) annotations.
 - ``incremental_begin`` wipe-on-params-change → ``DELETE FROM`` /
@@ -78,7 +83,7 @@ from dataclasses import dataclass
 
 import pyarrow.dataset as pads
 import pyarrow.parquet as papq
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, DataFrameWriter, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -94,6 +99,19 @@ class CommitInfo:
     # order, partition columns last (the order a parquet read gives).
     # None = recorded before this field existed (reads infer it).
     schema: str | None = None
+
+
+# the parquet codec of every file the catalog writes (Iceberg's default)
+CODEC = "zstd"
+
+
+def _writer(df: DataFrame, mode: str,
+            partition_by: list[str] | None = None) -> DataFrameWriter:
+    """The one writer of catalog data files."""
+    w = df.write.mode(mode).option("compression", CODEC)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    return w
 
 
 def _column_types(schema: StructType) -> dict[str, str]:
@@ -353,23 +371,21 @@ class CheckpointCatalog:
             for stale in _glob.glob(path + ".tmp-*"):
                 shutil.rmtree(stale, ignore_errors=True)
             tmp = path + f".tmp-{self.run_id}"
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(tmp)
+            _writer(df, "overwrite", partition_by).parquet(tmp)
             if partition_by and not any(
                 e.startswith(f"{partition_by[0]}=") for e in os.listdir(tmp)
             ) and not (mode == "cow" and os.path.exists(path)):
-                # empty partitioned write emits no data files (only
-                # _SUCCESS) — unreadable. Re-write plain so the schema
-                # survives (the partition column becomes a regular
-                # column of the one empty file). NOT for an empty cow
-                # tick over an existing table: a plain file would mix
-                # with the carried-forward hive dirs into an unreadable
-                # layout — there the carry-forward below reproduces the
-                # prior snapshot verbatim (every partition unchanged).
+                # empty partitioned write emits no data file, so the
+                # directory it leaves is unreadable. Re-write plain so
+                # the schema survives (the partition column becomes a
+                # regular column of the one empty file). NOT for an
+                # empty cow tick over an existing table: a plain file
+                # would mix with the carried-forward hive dirs into an
+                # unreadable layout — there the carry-forward below
+                # reproduces the prior snapshot verbatim (every
+                # partition unchanged).
                 shutil.rmtree(tmp)
-                df.write.mode("overwrite").parquet(tmp)
+                _writer(df, "overwrite").parquet(tmp)
                 parts = []
             if mode == "cow" and os.path.exists(path):
                 # copy-on-write: partitions present in the new data are
@@ -403,10 +419,7 @@ class CheckpointCatalog:
             os.rename(tmp, path)
         elif mode == "append":
             before = set(self._dir_fingerprint(name))
-            w = df.write.mode("append")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
+            _writer(df, "append", partition_by).parquet(path)
             # an empty DataFrame writes one zero-row file: it stays only
             # as a table's one data file (its schema); otherwise it would
             # move the manifest and re-run every consumer for nothing
@@ -415,10 +428,7 @@ class CheckpointCatalog:
                      and papq.read_metadata(os.path.join(path, b)).num_rows == 0]
             if len(empty) < len(files):
                 for b in empty:
-                    head, tail = os.path.split(os.path.join(path, b))
-                    for fn in (tail, f".{tail}.crc"):
-                        if os.path.exists(os.path.join(head, fn)):
-                            os.remove(os.path.join(head, fn))
+                    os.remove(os.path.join(path, b))
         else:
             raise ValueError(mode)
 
@@ -498,7 +508,7 @@ class CheckpointCatalog:
             out = os.path.join(
                 self._lineage_dir(), f"{name}-{self.run_id}-{uuid.uuid4().hex[:8]}.parquet"
             )
-            papq.write_table(table, out)
+            papq.write_table(table, out, compression=CODEC)
         with open(side + ".tmp", "w") as f:
             json.dump(sorted(all_names), f)
         os.replace(side + ".tmp", side)

@@ -207,12 +207,14 @@ def test_verify_sig16_fast_path_matches_full_sig(spark):
 
 
 def test_pipeline_sig_table_derived_columns_consistent(spark, tmp_path, docs):
-    """The pipeline's minhash_sigs table must carry bands == the band
-    hashes recomputed from sig, and sig16 == packed_sig16(sig) — the
-    contract the band_rows/verify column-pruned fast paths rely on."""
+    """The pipeline's minhash_sigs table stores exactly (url, bands,
+    sig16), and for every valid doc bands == the band hashes and sig16
+    == packed_sig16 of the signature recomputed from its valid_docs
+    text — the contract the band_rows/verify column-pruned paths rely
+    on."""
     from deduplicator_go_spark.config import DedupConfig
     from deduplicator_go_spark.operators.lsh import band_hash_array
-    from deduplicator_go_spark.operators.minhash import packed_sig16
+    from deduplicator_go_spark.operators.minhash import minhash_signatures, packed_sig16
     from deduplicator_go_spark.plans.pipeline import DedupPipeline
     from deduplicator_go_spark.sources.catalog import CheckpointCatalog
 
@@ -220,10 +222,21 @@ def test_pipeline_sig_table_derived_columns_consistent(spark, tmp_path, docs):
     pipe = DedupPipeline(spark, CheckpointCatalog(str(tmp_path / "ck")), c)
     pipe.run(docs.limit(200))
     t = pipe.catalog.read(spark, "minhash_sigs")
-    assert {"url", "sig", "bands", "sig16"} <= set(t.columns)
-    bad = t.filter(
-        (F.col("bands") != band_hash_array(c.lsh_bands, c.lsh_rows))
-        | (F.col("sig16") != packed_sig16(c.num_perm))
+    assert set(t.columns) == {"url", "bands", "sig16"}
+    want = minhash_signatures(
+        pipe.catalog.read(spark, "valid_docs").select("url", "text"),
+        c.shingle_size, c.num_perm, c.minhash_seed,
+    ).select(
+        "url",
+        band_hash_array(c.lsh_bands, c.lsh_rows).alias("want_bands"),
+        packed_sig16(c.num_perm).alias("want_sig16"),
+    )
+    n = want.count()
+    assert n > 0 and t.count() == n
+    joined = t.join(want, "url")
+    assert joined.count() == n
+    bad = joined.filter(
+        (F.col("bands") != F.col("want_bands")) | (F.col("sig16") != F.col("want_sig16"))
     ).count()
     assert bad == 0
 

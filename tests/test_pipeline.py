@@ -88,6 +88,32 @@ def test_lineage_rows_written(spark, ran):
     assert lin.filter(F.col("params_hash") != pipe.ph).count() == 0
 
 
+def test_catalog_files_are_zstd_without_sidecars(ran):
+    """Every data file of the 11 stage tables and of the lineage table
+    is zstd parquet, and the catalog holds no .crc checksum sidecar or
+    _SUCCESS marker."""
+    import os
+
+    import pyarrow.parquet as papq
+
+    cat, _, report = ran
+    tables = [s.name for s in report.stages] + ["_lineage"]
+    assert len(tables) == 12
+    for table in tables:
+        root = cat.table_path(table)
+        codecs = set()
+        for dirpath, _dirs, files in os.walk(root):
+            for fn in files:
+                md = papq.read_metadata(os.path.join(dirpath, fn))
+                codecs |= {md.row_group(g).column(c).compression
+                           for g in range(md.num_row_groups)
+                           for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (table, codecs)
+    extra = [os.path.join(d, fn) for d, _dirs, files in os.walk(cat.root) for fn in files
+             if fn.endswith(".crc") or fn == "_SUCCESS"]
+    assert not extra, extra[:5]
+
+
 def test_resume_skips_completed_stages(spark, docs, ran):
     cat, pipe, first = ran
     # simulate a re-run after a kill at the very end: everything committed
@@ -723,3 +749,27 @@ def test_killed_tick_clusters_and_report_equal_scratch(
         got, want = _rows(spark, cat, table), _rows(spark, scat, table)
         assert got == want, (table, len(got), len(want),
                              len(set(want) - set(got)), len(set(got) - set(want)))
+
+
+def test_catalog_of_older_schema_version_is_rebuilt(spark, docs, ran, tmp_path_factory,
+                                                     monkeypatch):
+    """A catalog written under an older TABLE_SCHEMA_VERSION is wiped
+    and rebuilt, not appended to: the next run re-runs every stage, its
+    clusters and dup_report equal a from-scratch run, and the run after
+    it skips all 11 stages."""
+    from deduplicator_go_spark.plans import pipeline as P
+
+    root = str(tmp_path_factory.mktemp("oldschema"))
+    with monkeypatch.context() as m:
+        m.setattr(P, "TABLE_SCHEMA_VERSION", 2)
+        P.DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+
+    r1 = DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+    assert len(r1.stages) == 11
+    assert not [s.name for s in r1.stages if s.skipped]
+    cat, scat = CheckpointCatalog(root), ran[0]
+    for table in ("clusters", "dup_report"):
+        assert _rows(spark, cat, table) == _rows(spark, scat, table), table
+    r2 = DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+    assert len(r2.stages) == 11
+    assert all(s.skipped for s in r2.stages), [s.name for s in r2.stages if not s.skipped]
