@@ -17,11 +17,13 @@ Stage graph (each box = a committed catalog table + lineage rows;
 Resume contract (north rule; generalizes the reference's keyset
 bookmarks, /root/reference/files/hash.go:202-283): a killed run
 re-invoked with the same catalog + config skips every stage whose
-commit marker matches the config's params_hash AND whose ``<stage>_src``
-bookmark (below) records exactly the current file manifest of each of
-its producers (for valid_docs: the input fingerprint). The bookmark is
-the one record of what a stage consumed: it decides both the skip and
-the frontier.
+commit record carries the config's params_hash AND whose ``consumed``
+(below) equals the current file manifest of each of its producers (for
+valid_docs: the input fingerprint). That record is the only one a
+stage table has: its manifest, its params and what it consumed decide
+both the skip and the frontier. A table whose record carries other
+params, or that holds data but no record, is dropped before its stage
+runs.
 
 Tick contract (the reference's operating model — a 1-minute timer over
 a ``hash IS NULL`` work queue, systemd/deduplicator-hash.timer:5-8,
@@ -35,21 +37,24 @@ newly-appended candidate pairs. exact_edges appends edges only for
 connected components with prior labels + frontier edges and rewrites
 only the copy-on-write buckets holding an affected member or new doc;
 dup_report recomputes the report rows of every id (cluster_id or url)
-found in the clusters buckets rewritten since its bookmark and carries
-the other rows over.
+found in the clusters buckets rewritten since its last commit and
+carries the other rows over.
 
-Frontier protocol: every stage keeps one ``<stage>_src`` bookmark,
-``{params_hash, <each upstream>: files, self: files}``: the eight
-append stages (exact_sigs, exact_edges, minhash_sigs, band_rows,
-candidates, verified_pairs, anchor_rows, substr_pairs — whose
-upstreams are anchor_rows and verified_pairs), clusters (upstreams
-verified_pairs, exact_edges and valid_docs) and dup_report (upstream
-clusters); valid_docs records ``input: [rows, url-hash sum]`` in place
-of upstream files. ``_stage`` writes it after the stage's commit and
-reads it once to decide the skip and the frontier (``_frontier``).
-Without a valid one, a stage takes each whole upstream: an append stage
-anti-joins it against its whole own table, clusters and dup_report
-rebuild and overwrite.
+Frontier protocol: every stage's commit record holds ``consumed``,
+``{<each upstream>: files}``: the eight append stages (exact_sigs,
+exact_edges, minhash_sigs, band_rows, candidates, verified_pairs,
+anchor_rows, substr_pairs — whose upstreams are anchor_rows and
+verified_pairs), clusters (upstreams verified_pairs, exact_edges and
+valid_docs) and dup_report (upstream clusters); valid_docs records
+``input: [rows, url-hash sum]`` in place of upstream files. ``_stage``
+hands it to the catalog write, whose last step replaces the record,
+and reads the record once to decide the skip and the frontier
+(``_frontier``): the producer files not in ``consumed`` are new, and
+the stage's own data files not in the record's ``files`` (a write
+killed before its record) may already cover some of them. Without a
+record that holds ``consumed``, a stage takes each whole upstream: an
+append stage anti-joins it against its whole own table, clusters and
+dup_report rebuild and overwrite.
 
 What a tick WRITES is frontier-proportional; what it reads is not yet.
 These whole-table reads remain on the tick path:
@@ -91,7 +96,7 @@ from ..operators.lsh import band_table, candidate_pairs
 from ..operators.minhash import minhash_signatures
 from ..operators.suffix import anchor_table, prune_substr_candidates, verify_substr_pairs
 from ..operators.verify import verify_pairs
-from ..sources.catalog import CheckpointCatalog
+from ..sources.catalog import CheckpointCatalog, CommitInfo
 
 # Bump whenever the SCHEMA of any catalog stage table changes (column
 # set or meaning), so incremental catalogs written by earlier code
@@ -123,11 +128,11 @@ class PipelineReport:
 
 @dataclass
 class Frontier:
-    """The work a frontier-fed stage has left, read from its bookmark by
-    ``DedupPipeline._frontier``."""
+    """The work a frontier-fed stage has left, read from its commit
+    record by ``DedupPipeline._frontier``."""
     new: dict[str, DataFrame]  # each producer's rows not yet processed
     done: DataFrame | None     # own rows that may already cover some of them
-    incremental: bool          # a valid bookmark exists (new holds the frontier only)
+    incremental: bool          # the record holds consumed (new holds the frontier only)
 
     @property
     def upstream(self) -> str:
@@ -177,85 +182,77 @@ class DedupPipeline:
                partition_by: list[str] | None = None,
                upstream: str | tuple[str, ...] = (),
                input_fp: list | None = None) -> StageResult:
-        """Run one stage unless its bookmark shows it has consumed the
-        current upstream. ``mode="append"`` is the frontier-driven form:
-        re-invoked on a grown upstream it appends only the frontier's
-        rows, reusing partial output from a killed run when params match.
-        Every stage's table is wiped first if it was built under other
-        params (``incremental_begin``), so a table that exists here was
-        built under these params.
+        """Run one stage unless its commit record shows it has consumed
+        the current upstream. ``mode="append"`` is the frontier-driven
+        form: re-invoked on a grown upstream it appends only the
+        frontier's rows, reusing the data files of a write killed before
+        its record. Every stage's table is dropped first unless its
+        record carries these params (``incremental_begin``), so a table
+        that exists here was committed under these params.
 
         ``upstream`` names the producers of a frontier-fed stage, whose
         ``build`` receives the stage's ``Frontier``; ``input_fp`` is the
         raw input's fingerprint for valid_docs, whose ``build`` takes no
-        argument. After the commit, the ``<name>_src`` bookmark records
-        what the stage consumed (each producer's manifest, or the input
-        fingerprint) and its own manifest; the stage is skipped while its
-        commit carries these params and that record equals the current
-        upstream. A ``cow`` write needs the bookmark's base: without it
-        the stage overwrites. A kill before the bookmark write re-runs
-        the stage once, over a wider frontier (see ``_frontier``)."""
+        argument. The write's record stores what the stage consumed
+        (each producer's manifest, or the input fingerprint); the stage
+        is skipped while its record carries these params and that
+        ``consumed`` equals the current upstream. A ``cow`` write needs
+        the record's base: without it the stage overwrites."""
         ups = (upstream,) if isinstance(upstream, str) else upstream
         consumed = {u: self.catalog.current_files(u) for u in ups}
         if input_fp is not None:
             consumed["input"] = input_fp
-        bm = self.catalog.read_bookmark(f"{name}_src")
-        if (bm is not None and bm.get("params_hash") == self.ph
-                and self.catalog.is_complete(name, self.ph)
-                and all(bm.get(k) == v for k, v in consumed.items())):
-            return StageResult(name, skipped=True, rows=self.catalog.table_rows(name), wall_ms=0)
+        info = self.catalog.commit_info(name)
+        if info is not None and info.params_hash == self.ph and info.consumed == consumed:
+            return StageResult(name, skipped=True, rows=info.rows, wall_ms=0)
         t0 = time.time()
         self.catalog.incremental_begin(name, self.ph)
         if ups:
-            f = self._frontier(name, ups, bm)
+            f = self._frontier(name, ups, info)
             if mode == "cow" and not f.incremental:
                 mode = "overwrite"
             df = build(f)
         else:
             df = build()
         info = self.catalog.write(df, name, self.ph, mode=mode,
-                                  partition_by=partition_by)
-        self.catalog.write_bookmark(
-            f"{name}_src",
-            {"params_hash": self.ph, **consumed,
-             "self": self.catalog.current_files(name)},
-        )
+                                  partition_by=partition_by, consumed=consumed)
         self._release_persisted()
         return StageResult(name, skipped=False, rows=info.rows, wall_ms=int((time.time() - t0) * 1000))
 
     def _read(self, name: str) -> DataFrame:
         return self.catalog.read(self.spark, name)
 
-    def _frontier(self, name: str, ups: tuple[str, ...], bm: dict | None) -> Frontier:
-        """The work left for stage ``name``, from ``bm``, its
-        ``<name>_src`` bookmark (the Iceberg incremental-snapshot-read
-        shape).
+    def _frontier(self, name: str, ups: tuple[str, ...],
+                  info: CommitInfo | None) -> Frontier:
+        """The work left for stage ``name``, from ``info``, its commit
+        record (the Iceberg incremental-snapshot-read shape).
 
-        With a bookmark stamped under these params, ``new`` holds ONLY
-        each producer's files written since it — never the standing
-        corpus — and ``done`` is the stage's own files written since its
-        ``self`` manifest. Never a ``distinct()`` of the whole own
-        table: for exploded outputs (band_rows ~bands rows/doc,
-        anchor_rows ~len/mod rows/doc) that is a standing-corpus
-        shuffle per tick (anchor_rows: 14 s of a 41 s tick at 20k docs).
+        With a record committed under these params that holds
+        ``consumed``, ``new`` holds ONLY each producer's files written
+        since it — never the standing corpus — and ``done`` the stage's
+        uncommitted files, or None when there are none. Never a
+        ``distinct()`` of the whole own table: for exploded outputs
+        (band_rows ~bands rows/doc, anchor_rows ~len/mod rows/doc) that
+        is a standing-corpus shuffle per tick (anchor_rows: 14 s of a
+        41 s tick at 20k docs).
 
-        Kill-window defence (output committed, bookmark write lost):
-        rows already appended live in own files the ``self`` manifest
-        doesn't cover, so anti-joining ``done`` away makes the rerun
-        append no duplicates; a stale bookmark only widens ``new`` to
-        a superset that the same anti-join (or, for clusters and
-        dup_report, an idempotent relabel / recompute) absorbs.
+        Kill-window defence (data landed, record replace lost): rows
+        already appended live in own files the record's ``files`` don't
+        list, so anti-joining ``done`` away makes the rerun append no
+        duplicates; ``new`` is the killed run's frontier or a superset,
+        which the same anti-join (or, for clusters and dup_report, an
+        idempotent relabel / recompute) absorbs.
 
-        Without a valid bookmark (first run, params change, a killed
-        first run, a pre-bookmark catalog), ``new`` holds each whole
-        producer table and ``done`` the whole own table, if it exists."""
-        if (bm is not None and bm.get("params_hash") == self.ph
-                and self.catalog.exists(name)):
+        Without such a record (first run, params change, a catalog
+        written before records held ``consumed``), ``new`` holds each
+        whole producer table and ``done`` the whole own table, if it
+        exists."""
+        if info is not None and info.params_hash == self.ph and info.consumed is not None:
+            own = self.catalog.uncommitted_files(name)
             return Frontier(
-                {u: self.catalog.appended_since(self.spark, u, bm.get(u, []))
+                {u: self.catalog.appended_since(self.spark, u, info.consumed.get(u, []))
                  for u in ups},
-                done=self.catalog.appended_since(self.spark, name,
-                                                 bm.get("self", [])),
+                done=self.catalog.read_files(self.spark, name, own) if own else None,
                 incremental=True,
             )
         return Frontier(
@@ -267,7 +264,7 @@ class DedupPipeline:
     def _pairs(self, f: Frontier) -> DataFrame:
         """Candidate pairs from a staged (url, band_id, band_hash) table
         — the one pair builder of the LSH candidate stage and the substr
-        stage. Without a bookmark, the full banded self-join; with one,
+        stage. Without a prior record, the full banded self-join; with one,
         the bucket-membership diff: only buckets containing a frontier
         member are re-paired, and only pairs touching the frontier are
         kept (old-old pairs were generated on a previous tick). Pairs
@@ -426,13 +423,13 @@ class DedupPipeline:
         # exact edges: append-incremental. On a tick only (hash, size)
         # groups touched by newly-signed docs are re-starred — the
         # frontier comes from the exact_sigs files appended since this
-        # stage's bookmark, so a tick never re-groups the standing
+        # stage's last commit, so a tick never re-groups the standing
         # corpus. A new member smaller than a group's prior root yields
         # a second star root for that group; the union of stars is
         # connectivity-equivalent (CC labels by component-min, not by
         # star shape). Re-starring a touched group regenerates its old
         # edges too, so the anti-join runs against the WHOLE edge table,
-        # not only the files since the bookmark.
+        # not only the files since the last commit.
         def build_exact_edges(f: Frontier) -> DataFrame:
             sigs = f.rows
             if f.incremental:
@@ -454,8 +451,9 @@ class DedupPipeline:
 
         # minhash: incremental append against own completed output — the
         # Spark analog of the reference's `hash IS NULL` work queue.
-        # Partial output from a killed run is only reused when it was
-        # computed under the same params (sidecar check), otherwise wiped.
+        # Output of a write killed before its record is reused (the
+        # frontier's ``done``); a table committed under other params is
+        # wiped.
         def build_minhash(f: Frontier) -> DataFrame:
             # The signature table stores two columns derived from the
             # 128-bigint sig in the SAME job that writes it (narrow
@@ -581,7 +579,7 @@ class DedupPipeline:
         # clustering: tick-incremental connected components (round-4
         # verdict Missing #1 — the last whole-graph per-tick rebuild).
         # A tick seeds CC with (a) the frontier edges — verified dup
-        # pairs and exact edges appended since this stage's bookmark,
+        # pairs and exact edges appended since this stage's last commit,
         # read via the file-manifest diff, and (b) prior-label star
         # edges for ONLY the components those edges touch. Prior labels
         # encode all prior connectivity, so star rounds converge over
@@ -659,9 +657,9 @@ class DedupPipeline:
                 F.coalesce("new_id", "cluster_id").alias("cluster_id"),
                 "pbucket",
             )
-            # a stale bookmark (kill between the clusters commit and the
-            # bookmark write) widens new_docs to docs already labeled —
-            # the anti-join keeps the relabel path authoritative for them
+            # a clusters write killed after its swap, before its record,
+            # widens new_docs to docs already labeled — the anti-join
+            # keeps the relabel path authoritative for them
             new_rows = (
                 new_docs.join(prior_changed.select("url"), "url", "left_anti")
                 .join(assignments, "url", "left")
@@ -703,13 +701,14 @@ class DedupPipeline:
             )
 
         # dup_report: a tick recomputes only the report rows of ids found
-        # in the clusters buckets rewritten since this stage's bookmark.
+        # in the clusters buckets rewritten since this stage's last commit.
         # Every changed cluster has a row there: its (new) id as
         # cluster_id, a merged-away id as the url of its own relabeled
         # row; carried buckets keep their file names and rows. So those
         # ids are a superset of the changed ones, and the other report
         # rows carry over (round-4 verdict: the report was a whole-graph
-        # reduction per tick). A stale bookmark only widens the superset.
+        # reduction per tick). A report write killed before its record
+        # only widens the superset.
         def build_report(f: Frontier) -> DataFrame:
             if not f.incremental:
                 return _report_rows(f.rows)
@@ -729,7 +728,7 @@ class DedupPipeline:
             self._stage("dup_report", build_report, mode="overwrite", upstream="clusters")
         )
 
-        # input size from the valid_docs commit marker (parquet-footer
+        # input size from the valid_docs commit record (parquet-footer
         # lineage) — no extra scan job over the raw input. docs_in
         # therefore means VALID documents (post blank-row filter), the
         # population every downstream stage and the recall denominator

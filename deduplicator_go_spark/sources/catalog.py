@@ -1,36 +1,42 @@
-"""Checkpoint catalog: parquet-backed stage tables with atomic commit
-markers and per-partition lineage rows.
+"""Checkpoint catalog: parquet-backed stage tables, each with one
+atomic commit record, plus per-partition lineage rows.
 
 Generalizes the reference's resume contract — keyset bookmarks +
 ``hash IS NULL`` work-queue predicates (/root/reference/files/
 hash.go:202-283) and batched transactions (find.go:125, prune.go:44)
-— into Spark-native terms: each stage writes its whole output, then a
-commit marker stamped with the config's params_hash, then a consumer
-bookmark of the producer manifests it read; a killed job rerun skips
-every committed stage whose bookmark still matches and (for
-incremental stages) anti-joins the frontier against its own completed
-output.
+— into Spark-native terms: each stage writes its output, then ONE
+commit record that carries the config's params_hash, the table's data
+file manifest and what the stage consumed (the producer manifests it
+read). A killed job rerun skips every stage whose record still matches
+its producers and (for incremental stages) anti-joins the frontier
+against the data files its record does not list yet.
 
 On a production cluster this catalog is an Iceberg/Delta catalog
 (atomic snapshot commits, hidden partitioning); those jars are not in
 this image, so the same contract is implemented over parquet dirs +
-JSON markers behind one small interface — the pipeline code does not
-care which backend it gets.
+one JSON record per table behind one small interface — the pipeline
+code does not care which backend it gets.
 
 Interface → Iceberg mapping (keep new call sites inside this contract
 so an Iceberg backend is a drop-in):
 
+- commit record (``_<t>_COMMIT.json``, ``CommitInfo``) → one snapshot
+  metadata commit: summary (run id, rows, wall, params_hash as a table
+  property), schema, file manifest (``files``) and the consumer's
+  snapshot ids of its producers (``consumed``), swapped in atomically
+  (here: one tmp-file write + ``os.replace``, the last step of every
+  ``write``). Until that swap the previous record stands, so a killed
+  write leaves the last commit intact plus, at most, data files that
+  no record lists (``uncommitted_files``).
 - ``write(mode="overwrite")``  → ``REPLACE TABLE ... AS SELECT`` /
-  overwrite snapshot commit (here: temp dir + atomic rename; marker
-  removed first, written last — same crash window as a snapshot swap).
+  overwrite snapshot commit (here: temp dir + atomic rename).
 - ``write(mode="append")``     → fast-append snapshot commit (here:
-  parquet append; the params sidecar written by ``incremental_begin``
-  plays the role of table properties stamped on the first append). An
-  append of zero rows adds no data file to a table that has one, so
-  its manifest, and every consumer's bookmark test, stays unchanged.
-- commit marker (``_*_COMMIT.json``) → the snapshot id + summary; a
-  table without a current marker is a mid-write table (resume wipes or
-  frontier-fills it, never trusts it).
+  parquet append). An append of zero rows adds no data file to a
+  table that has one, so its manifest, and every consumer's skip test,
+  stays unchanged.
+- ``incremental_begin`` → keep a table only while its current snapshot
+  carries these params; otherwise ``DROP TABLE`` (a table built under
+  other params, or one with data files but no record).
 - ``table_rows`` → ``snapshot.summary["total-records"]`` (here:
   parquet footers; metadata either way, never a scan job).
 - ``CommitInfo.schema`` → the table schema in Iceberg's table
@@ -47,13 +53,11 @@ so an Iceberg backend is a drop-in):
   column chunk).
 - lineage rows per output file → per-data-file manifest entries plus
   the engine's (run_id, stage, wall_ms, params_hash) annotations.
-- ``incremental_begin`` wipe-on-params-change → ``DELETE FROM`` /
-  truncate + property restamp in one transaction.
 - ``current_files`` / ``appended_since`` → the snapshot file manifest
   and Iceberg's incremental snapshot read (``incremental-from-
-  snapshot-id``): a consumer records the producer's file list in a
-  bookmark at commit time and later reads ONLY files appended since —
-  a frontier-proportional scan, never a full-table distinct.
+  snapshot-id``): a consumer's record holds each producer's file list
+  as of its commit, and it later reads ONLY files appended since — a
+  frontier-proportional scan, never a full-table distinct.
 - ``write(mode="cow", partition_by=[...])`` → Iceberg copy-on-write
   ``MERGE INTO`` / ``INSERT OVERWRITE`` with dynamic partition
   overwrite: the DataFrame carries the full new content of the
@@ -62,10 +66,6 @@ so an Iceberg backend is a drop-in):
   into the swap dir — same inode, no data copy). Lineage rows are
   emitted only for the NEW files (manifest entries), so per-tick
   lineage is proportional to the touched partitions.
-- ``write_bookmark`` / ``read_bookmark`` → consumer-side snapshot ids
-  stored as table properties (here: an atomic JSON sidecar). A consumer
-  whose bookmark still equals each producer's manifest has consumed the
-  current upstream and is skipped (snapshot diff: nothing new).
 
 Lineage rows are per output *file* (the local stand-in for a
 partition): (run_id, stage, partition, rows, bytes, wall_ms,
@@ -99,6 +99,12 @@ class CommitInfo:
     # order, partition columns last (the order a parquet read gives).
     # None = recorded before this field existed (reads infer it).
     schema: str | None = None
+    # the data-file manifest: relative names of the table's files
+    files: list[str] | None = None
+    # what the stage consumed: each producer's manifest, or the raw
+    # input's fingerprint under "input". None = written outside the
+    # pipeline (or before these fields existed).
+    consumed: dict | None = None
 
 
 # the parquet codec of every file the catalog writes (Iceberg's default)
@@ -153,17 +159,12 @@ class CheckpointCatalog:
         return CommitInfo(**{k: v for k, v in fields.items()
                              if k in CommitInfo.__dataclass_fields__})
 
-    def is_complete(self, name: str, params_hash: str) -> bool:
-        """Committed under these params."""
-        info = self.commit_info(name)
-        return info is not None and info.params_hash == params_hash
-
     def _dir_fingerprint(self, name: str) -> tuple:
         """Sorted relative names of the table's data files, from a local
-        directory walk (~ms). Deliberately NOT the frags sidecar: a kill
-        mid-append leaves orphan data files the sidecar doesn't know
-        about, and the resume defence (frontier anti-join against the
-        table's actual contents) must see them."""
+        directory walk (~ms). Deliberately NOT the record's manifest: a
+        write killed before its record leaves data files the record
+        doesn't list, and the resume defence (frontier anti-join against
+        the table's actual contents) must see them."""
         path = self.table_path(name)
         out = []
         for dirpath, _dirs, files in os.walk(path):
@@ -174,9 +175,9 @@ class CheckpointCatalog:
         return tuple(sorted(out))
 
     def _reader(self, spark: SparkSession, name: str) -> DataFrameReader:
-        """``spark.read`` carrying the schema the commit marker recorded,
+        """``spark.read`` carrying the schema the commit record holds,
         so resolving the table reads no parquet footers; inference only
-        for a table without a marker or with a marker older than
+        for a table without a record or with a record older than
         ``CommitInfo.schema``."""
         info = self.commit_info(name)
         if info is None or not info.schema:
@@ -189,12 +190,12 @@ class CheckpointCatalog:
         per resolution: ~0.1 s for a plain table, and ~0.75 s for the
         64-bucket ``clusters`` table, whose listing at Spark's default
         threshold is a 64-task job too (warm session, 4 cores). From the
-        marker's schema, with the session's driver-side listing, the same
+        record's schema, with the session's driver-side listing, the same
         resolutions take ~0.015 s and ~0.03 s and start no job. The
         cache still skips even that for an unchanged table. The cache
         key is the actual data-file set (directory walk, not the
-        manifest sidecar), so any append/overwrite/cow — including
-        orphan files from a killed append — changes the key and forces
+        record's manifest), so any append/overwrite/cow — including
+        uncommitted files of a killed write — changes the key and forces
         a fresh resolution. On Iceberg this is the table's current
         snapshot id."""
         app = spark.sparkContext.applicationId
@@ -210,43 +211,38 @@ class CheckpointCatalog:
         return os.path.exists(self.table_path(name))
 
     def table_rows(self, name: str) -> int:
-        """Row count from parquet footers — metadata only, no scan job.
-        Prefers the commit marker (already totalled); falls back to
-        footers for a table whose marker was lost to a mid-write kill."""
+        """Row count from the commit record (totalled from parquet
+        footers at commit) — metadata only, no scan job; 0 for a table
+        without one."""
         info = self.commit_info(name)
-        if info is not None:
-            return info.rows
-        if not self.exists(name):
-            return 0
-        ds = pads.dataset(self.table_path(name), format="parquet")
-        return sum(
-            (f.metadata.num_rows if getattr(f, "metadata", None) is not None else f.count_rows())
-            for f in ds.get_fragments()
-        )
+        return info.rows if info is not None else 0
 
     def drop(self, name: str) -> None:
         self._read_cache.pop(name, None)
         path = self.table_path(name)
         if os.path.exists(path):
             shutil.rmtree(path)
-        for side in (self._marker(name), self._params_sidecar(name),
-                     self._frags_sidecar(name), self._bookmark(name)):
-            if os.path.exists(side):
-                os.remove(side)
+        if os.path.exists(self._marker(name)):
+            os.remove(self._marker(name))
 
     # -- snapshot file manifest + incremental reads ------------------------
     def current_files(self, name: str) -> list[str]:
         """The table's data-file relative names — the snapshot manifest.
-        Metadata only: served from the frags sidecar written at commit
-        time, but only while the commit marker stands. ``write`` removes
-        the marker before it writes, so a table without one may hold
-        data files of a killed write that the sidecar never recorded;
-        its manifest is the directory listing."""
-        side = self._frags_sidecar(name)
-        if os.path.exists(self._marker(name)) and os.path.exists(side):
-            with open(side) as f:
-                return json.load(f)
+        Metadata only: the commit record's ``files``. A table without
+        a record, or with one older than that field, lists its
+        directory."""
+        info = self.commit_info(name)
+        if info is not None and info.files is not None:
+            return list(info.files)
         return list(self._dir_fingerprint(name))
+
+    def uncommitted_files(self, name: str) -> list[str]:
+        """Data files in the table's directory that its record does not
+        list: those of a write killed after its data landed and before
+        its record replace. Empty for a table without a record, whose
+        manifest is its directory."""
+        committed = set(self.current_files(name))
+        return [b for b in self._dir_fingerprint(name) if b not in committed]
 
     def read_files(self, spark: SparkSession, name: str,
                    files: list[str]) -> DataFrame:
@@ -266,7 +262,7 @@ class CheckpointCatalog:
                        seen_files: list[str]) -> DataFrame:
         """Iceberg incremental snapshot read, parquet-dir stand-in:
         the rows of ``name`` appended since a consumer recorded
-        ``seen_files`` (its bookmark of the producer's manifest). Under
+        ``seen_files`` (the producer's manifest in its record). Under
         the append-only contract files are immutable, so new-files ≡
         new-rows; the scan touches ONLY the appended files — the
         frontier — never the standing table."""
@@ -274,56 +270,13 @@ class CheckpointCatalog:
         new = [b for b in self.current_files(name) if b not in seen]
         return self.read_files(spark, name, new)
 
-    # -- consumer bookmarks ------------------------------------------------
-    # A consumer stage records the manifest of each producer it has fully
-    # processed (plus its params hash) — the snapshot-id bookmark of an
-    # Iceberg incremental read. Written AFTER the consumer's own commit;
-    # a kill in between leaves a stale bookmark, which is safe: the next
-    # run finds it behind the producers, re-runs the consumer over a
-    # superset frontier, and idempotent anti-joins / relabels absorb the
-    # overlap.
-    def _bookmark(self, name: str) -> str:
-        return os.path.join(self.root, f"_{name}_BOOKMARK.json")
-
-    def write_bookmark(self, name: str, payload: dict) -> None:
-        side = self._bookmark(name)
-        with open(side + ".tmp", "w") as f:
-            json.dump(payload, f)
-        os.replace(side + ".tmp", side)
-
-    def read_bookmark(self, name: str) -> dict | None:
-        side = self._bookmark(name)
-        if not os.path.exists(side):
-            return None
-        with open(side) as f:
-            return json.load(f)
-
-    def drop_bookmark(self, name: str) -> None:
-        side = self._bookmark(name)
-        if os.path.exists(side):
-            os.remove(side)
-
-    # -- incremental-table params sidecar ----------------------------------
-    # An append-mode (incremental) table accumulates data across runs; its
-    # rows are only reusable if they were produced under the same params.
-    # The sidecar is written BEFORE the first append of a run so a killed
-    # run can still be classified on resume.
-    def _params_sidecar(self, name: str) -> str:
-        return os.path.join(self.root, f"_{name}_PARAMS.json")
-
     def incremental_begin(self, name: str, params_hash: str) -> None:
-        """Ensure the incremental table is reusable under ``params_hash``;
-        wipe it if it was built under different params."""
-        side = self._params_sidecar(name)
-        current = None
-        if os.path.exists(side):
-            with open(side) as f:
-                current = json.load(f).get("params_hash")
-        if current != params_hash and self.exists(name):
+        """Keep the table only if its record carries ``params_hash``:
+        drop one built under other params, or one holding data files
+        but no record (a first write killed before its record)."""
+        info = self.commit_info(name)
+        if self.exists(name) and (info is None or info.params_hash != params_hash):
             self.drop(name)
-        with open(side + ".tmp", "w") as f:
-            json.dump({"params_hash": params_hash, "run_id": self.run_id}, f)
-        os.replace(side + ".tmp", side)
 
     # -- writes -----------------------------------------------------------
     def write(
@@ -333,19 +286,23 @@ class CheckpointCatalog:
         params_hash: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
+        consumed: dict | None = None,
     ) -> CommitInfo:
-        """Write a stage output + commit marker + lineage rows.
+        """Write a stage output, its lineage rows and, last, its commit
+        record, which also carries ``consumed``.
 
-        overwrite goes through a temp dir + atomic rename so a kill
-        mid-write never leaves a half-table behind a valid marker
-        (marker is removed first, written last).
+        overwrite and cow build the new snapshot in a temp dir and swap
+        it in with one rename, so a kill mid-write never leaves a
+        half-table. The record is replaced in one ``os.replace`` after
+        the data and lineage landed; a kill before it leaves the
+        previous record, whose ``files`` do not list the new data
+        files.
 
         append and cow raise ``ValueError`` when the DataFrame's column
         names or types differ from the committed schema: the mixed
         directory would read back the missing columns as NULLs."""
         t0 = time.time()
         path = self.table_path(name)
-        marker = self._marker(name)
         prev = self.commit_info(name)
         if mode in ("append", "cow") and prev is not None and prev.schema \
                 and self.exists(name):
@@ -357,8 +314,6 @@ class CheckpointCatalog:
                     f"committed schema {want}"
                 )
         parts = list(partition_by or [])
-        if os.path.exists(marker):
-            os.remove(marker)
 
         if mode in ("overwrite", "cow"):
             # clean ALL orphaned temp dirs for this table, not just this
@@ -433,10 +388,12 @@ class CheckpointCatalog:
             raise ValueError(mode)
 
         wall_ms = int((time.time() - t0) * 1000)
-        # cow keeps the old manifest sidecar (reset=False) so lineage
-        # rows are emitted ONLY for newly written files — the carried-
-        # forward hardlinks keep their relative names and stay recorded
-        rows = self._record_lineage(name, params_hash, wall_ms, reset=(mode == "overwrite"))
+        # lineage rows only for files the previous record does not list:
+        # cow's carried-forward hardlinks keep their relative names
+        files, rows = self._record_lineage(
+            name, params_hash, wall_ms,
+            seen=set(prev.files or []) if prev is not None else set(),
+        )
         schema = StructType(
             [f for f in df.schema.fields if f.name not in parts]
             + [df.schema[p] for p in parts]
@@ -449,33 +406,33 @@ class CheckpointCatalog:
             wall_ms=wall_ms,
             completed_at=time.time(),
             schema=schema.json(),
+            files=files,
+            consumed=consumed,
         )
+        self._commit(info)
+        return info
+
+    def _commit(self, info: CommitInfo) -> None:
+        """Replace the table's record: the one commit point of a write."""
+        marker = self._marker(info.stage)
         with open(marker + ".tmp", "w") as f:
             json.dump(info.__dict__, f)
         os.replace(marker + ".tmp", marker)
-        return info
-
-    def _frags_sidecar(self, name: str) -> str:
-        return os.path.join(self.root, f"_{name}_FRAGS.json")
 
     def _record_lineage(self, name: str, params_hash: str, wall_ms: int,
-                        reset: bool = True) -> int:
+                        seen: set[str]) -> tuple[list[str], int]:
         """Per-output-file row counts from parquet footers (metadata-only
-        read — no data scan). Returns the table's TOTAL rows.
+        read — no data scan). Returns the table's sorted data-file
+        manifest and its TOTAL rows.
 
-        Lineage rows are emitted only for files not recorded before
-        (tracked in a per-table sidecar, reset on overwrite): an
-        append-mode tick would otherwise re-record every prior tick's
-        files — duplicated lineage rows, re-attributed to the wrong
-        run/wall, quadratic over a long incremental backfill."""
+        Lineage rows are emitted only for files not in ``seen`` (the
+        previous record's manifest): an append-mode tick would otherwise
+        re-record every prior tick's files — duplicated lineage rows,
+        re-attributed to the wrong run/wall, quadratic over a long
+        incremental backfill."""
         import pyarrow as pa
 
         path = self.table_path(name)
-        side = self._frags_sidecar(name)
-        seen: set[str] = set()
-        if not reset and os.path.exists(side):
-            with open(side) as f:
-                seen = set(json.load(f))
         frags = []
         total = 0
         all_names = []
@@ -509,10 +466,7 @@ class CheckpointCatalog:
                 self._lineage_dir(), f"{name}-{self.run_id}-{uuid.uuid4().hex[:8]}.parquet"
             )
             papq.write_table(table, out, compression=CODEC)
-        with open(side + ".tmp", "w") as f:
-            json.dump(sorted(all_names), f)
-        os.replace(side + ".tmp", side)
-        return total
+        return sorted(all_names), total
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._lineage_dir())

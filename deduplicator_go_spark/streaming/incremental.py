@@ -95,7 +95,8 @@ def run_incremental(
     frontier plan per tick. Under the contract, ``appended <
     batch_limit`` ⇔ the frontier batch was short ⇔ drained.
     """
-    catalog.incremental_begin(table, params_hash)  # may wipe on params change
+    # kept only if its record carries params_hash, else dropped
+    catalog.incremental_begin(table, params_hash)
     before = catalog.table_rows(table)
     appended_total = 0
     for _ in range(max_ticks):

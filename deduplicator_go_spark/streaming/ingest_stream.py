@@ -17,8 +17,8 @@ Semantics and exactly-once:
   replays the batch). The batch body therefore (a) anti-joins the
   micro-batch against the standing ``raw_docs`` table on url before
   appending — a replay appends nothing — and (b) runs the pipeline,
-  whose stages are themselves idempotent via commit markers +
-  bookmarks. Both defences already exist for the batch path; the
+  whose stages are themselves idempotent via their commit records.
+  Both defences already exist for the batch path; the
   stream just reuses them.
 - ``raw_docs`` is the standing append-only input table (the Iceberg
   table of the north rule); each tick hands the pipeline the WHOLE

@@ -14,9 +14,9 @@ The script builds no SparkSession configuration beyond what the
 cluster provides via spark-submit conf — executor counts, memory,
 shuffle partitions are deployment decisions; AQE + Arrow are enabled
 defensively if unset.  Re-running the same command after a failure
-resumes from the checkpoint catalog (same params hash + each stage's
-bookmark equal to its producers' current file manifests → completed
-stages skip). Re-running on a GROWN
+resumes from the checkpoint catalog (each stage's commit record
+carrying the same params hash and, as consumed, its producers' current
+file manifests → completed stages skip). Re-running on a GROWN
 input table is an incremental tick: per-doc stages append only the
 frontier, candidate generation re-pairs only buckets whose membership
 changed, verification runs only on new pairs — schedule it from cron

@@ -38,6 +38,36 @@ def test_run_incremental_drains_in_batches(spark, tmp_path):
     assert out.select("url").distinct().count() == 25
 
 
+def test_run_incremental_rebuilds_under_new_params(spark, tmp_path):
+    """run_incremental keeps a table only while its commit record
+    carries the call's params: under p1, then p2, the second call
+    rebuilds the table instead of appending to it, and a table holding
+    data files but no record is rebuilt too."""
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    inputs = spark.createDataFrame([(f"u{i}",) for i in range(10)], "url string")
+
+    def run(params):
+        return run_incremental(
+            spark, cat, "sigs", inputs,
+            lambda batch: batch.withColumn("params", F.lit(params)),
+            params_hash=params,
+        )
+
+    assert run("p1") == 10
+    assert run("p1") == 0  # drained under the same params
+    assert run("p2") == 10
+    out = cat.read(spark, "sigs")
+    assert sorted((r.url, r.params) for r in out.collect()) == sorted(
+        (f"u{i}", "p2") for i in range(10)
+    )
+    assert cat.commit_info("sigs").params_hash == "p2"
+
+    cat.drop("sigs")
+    inputs.limit(4).withColumn("params", F.lit("stray")).write.parquet(cat.table_path("sigs"))
+    assert run("p3") == 10
+    assert {r.params for r in cat.read(spark, "sigs").collect()} == {"p3"}
+
+
 def test_staleness_filter(spark):
     df = spark.createDataFrame(
         [("a",), ("b",)], "url string"
@@ -127,7 +157,7 @@ def test_read_cache_invalidates_on_data_change(spark, tmp_path):
     set): an unchanged table returns the SAME DataFrame handle (no
     re-resolution — the fixed driver cost taxes scaling efficiency),
     while any append — including an orphan file from a killed append
-    that the frags sidecar never recorded — changes the fingerprint
+    that no commit record lists — changes the fingerprint
     and forces a fresh read that sees the new rows (the kill-window
     frontier defence reads actual contents, not the manifest)."""
     import pandas as pd
@@ -149,7 +179,7 @@ def test_read_cache_invalidates_on_data_change(spark, tmp_path):
     assert r2.count() == 3
 
     # orphan file written behind the catalog's back (killed mid-append:
-    # data file exists, sidecar/marker never updated) ALSO invalidates
+    # data file exists, record never replaced) ALSO invalidates
     pd.DataFrame({"url": ["u4"]}).to_parquet(
         cat.table_path("t") + "/part-orphan.parquet"
     )
@@ -270,7 +300,7 @@ def test_append_with_mismatched_schema_raises(spark, tmp_path):
 
 def test_empty_append_leaves_manifest_unchanged(spark, tmp_path):
     """An append of zero rows leaves no data file in a table that has
-    one, so the manifest that consumers' bookmarks compare against is
+    one, so the manifest that consumers' records compare against is
     unchanged; the first write of a table keeps its empty file, so the
     table still reads with its schema."""
     cat = CheckpointCatalog(str(tmp_path / "cat"))

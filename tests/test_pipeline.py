@@ -29,6 +29,26 @@ def _cluster_partition(rows):
     return {frozenset(v) for v in by_label.values() if len(v) > 1}
 
 
+def _assert_one_record_per_table(cat, tables):
+    """The catalog root holds each table's directory and one commit
+    record, plus ``_lineage``: no other sidecar."""
+    import os
+
+    want = set(tables) | {f"_{t}_COMMIT.json" for t in tables} | {"_lineage"}
+    assert set(os.listdir(cat.root)) == want
+
+
+def _assert_no_duplicate_keys(spark, cat):
+    """Every append table holds each of its keys once."""
+    keys = {"valid_docs": ["url"], "exact_sigs": ["url"], "minhash_sigs": ["url"],
+            "band_rows": ["url", "band_id", "band_hash"], "exact_edges": ["src", "dst"],
+            "candidates": ["url_a", "url_b"], "verified_pairs": ["url_a", "url_b"],
+            "anchor_rows": ["url", "band_id", "band_hash"], "substr_pairs": ["url_a", "url_b"]}
+    for stage, k in keys.items():
+        t = cat.read(spark, stage)
+        assert t.count() == t.select(*k).distinct().count(), stage
+
+
 def _rows(spark, cat, table):
     """The table's rows as a sorted list of tuples (a multiset)."""
     return sorted(
@@ -112,6 +132,7 @@ def test_catalog_files_are_zstd_without_sidecars(ran):
     extra = [os.path.join(d, fn) for d, _dirs, files in os.walk(cat.root) for fn in files
              if fn.endswith(".crc") or fn == "_SUCCESS"]
     assert not extra, extra[:5]
+    _assert_one_record_per_table(cat, tables[:-1])
 
 
 def test_resume_skips_completed_stages(spark, docs, ran):
@@ -252,16 +273,18 @@ def test_incremental_tick_appends_only_new_work(spark, docs, tmp_path_factory):
     # a third run with unchanged input skips every stage
     r3 = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
     assert all(s.skipped for s in r3.stages), [s.name for s in r3.stages if not s.skipped]
+    _assert_one_record_per_table(cat, [s.name for s in r3.stages])
 
 
 def test_incremental_tick_substr_appends_frontier_only(spark, corpus, docs, tmp_path_factory):
     """The substr stage was the one expensive per-tick overwrite left
     (30% of the pipeline floor, VERDICT r3 Next #2). With the staged
-    anchor table + substr_pairs_src bookmark, tick 2 must (a) anchor only
-    frontier docs, (b) LCS-verify only pairs touching a frontier doc —
-    lineage ∝ frontier, not corpus — (c) lose nothing from tick 1 and
-    still cover everything a from-scratch run finds, and (d) skip the
-    whole graph on an unchanged third tick."""
+    anchor table + the producer manifests in the substr_pairs record,
+    tick 2 must (a) anchor only frontier docs, (b) LCS-verify only
+    pairs touching a frontier doc — lineage ∝ frontier, not corpus —
+    (c) lose nothing from tick 1 and still cover everything a
+    from-scratch run finds, and (d) skip the whole graph on an
+    unchanged third tick."""
     root = str(tmp_path_factory.mktemp("tick-substr"))
     cfg = DedupConfig()
     tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
@@ -317,40 +340,6 @@ def test_incremental_tick_substr_appends_frontier_only(spark, corpus, docs, tmp_
     assert all(s.skipped for s in r3.stages), [s.name for s in r3.stages if not s.skipped]
 
 
-def test_resume_after_kill_between_pair_write_and_bookmark(spark, docs, tmp_path_factory):
-    """Kill window: the candidates/substr parquet write completed but
-    the commit marker and bookmark writes did not. On resume the
-    full-build branch sees a table with no bookmark — without its
-    anti-join defence it would append the entire pair set AGAIN,
-    silently doubling the table."""
-    import os
-    import shutil
-
-    root = str(tmp_path_factory.mktemp("killwin"))
-    cfg = DedupConfig()
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
-    cat = CheckpointCatalog(root)
-    n_cand = cat.read(spark, "candidates").count()
-    n_sub = cat.read(spark, "substr_pairs").count()
-    golden = sorted(map(tuple, cat.read(spark, "clusters").collect()))
-
-    # simulate the kill: markers + bookmarks gone, tables fully written
-    for stage in ("candidates", "substr_pairs"):
-        os.remove(os.path.join(root, f"_{stage}_COMMIT.json"))
-        cat.drop_bookmark(f"{stage}_src")
-
-    r2 = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
-    by2 = {s.name: s for s in r2.stages}
-    assert not by2["candidates"].skipped and not by2["substr_pairs"].skipped
-    assert cat.read(spark, "candidates").count() == n_cand  # no doubling
-    assert cat.read(spark, "substr_pairs").count() == n_sub
-    assert (
-        cat.read(spark, "candidates").select("url_a", "url_b").distinct().count()
-        == n_cand
-    )
-    assert sorted(map(tuple, cat.read(spark, "clusters").collect())) == golden
-
-
 def test_input_fingerprint_catches_same_count_url_swap(spark, docs, tmp_path_factory):
     """Round-3 advisor finding: staleness was keyed on row counts only,
     so an input whose url set changed under the SAME row count matched
@@ -397,30 +386,48 @@ def test_input_fingerprint_catches_even_multiplicity_swap(
 
 
 def test_partial_minhash_append_resumes_incrementally(spark, docs, tmp_path_factory):
-    """Kill mid-minhash: half the urls already appended → resume appends
-    only the missing half (frontier anti-join) and totals match."""
+    """A tick killed inside the minhash_sigs write: Spark's append had
+    landed the signatures of part of the frontier, in the stored (url,
+    bands, sig16) schema, and the record was not replaced. The rerun
+    appends exactly the missing urls: the landed files are the
+    frontier's ``done``, and no url is signed twice."""
     from deduplicator_go_spark.operators import exact as X
-    from deduplicator_go_spark.operators.minhash import minhash_signatures
+    from deduplicator_go_spark.operators.lsh import band_hash_array
+    from deduplicator_go_spark.operators.minhash import minhash_signatures, packed_sig16
 
     root = str(tmp_path_factory.mktemp("ckpt4"))
     cfg = DedupConfig()
+    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(
+        docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
+    )
     cat = CheckpointCatalog(root)
-    valid = X.valid_documents(docs)
-    half = valid.filter(F.abs(F.xxhash64("url")) % 2 == 0)
-    cat.incremental_begin("minhash_sigs", cfg.params_hash())
-    partial = minhash_signatures(half, cfg.shingle_size, cfg.num_perm, cfg.minhash_seed)
-    partial.write.mode("append").parquet(cat.table_path("minhash_sigs"))
-    n_half = cat.read(spark, "minhash_sigs").count()
-    # no commit marker → pipeline treats the stage as incomplete and resumes
-    pipe = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False)
-    report = pipe.run(docs)
-    by_name = {s.name: s for s in report.stages}
-    assert not by_name["minhash_sigs"].skipped
-    total = cat.read(spark, "minhash_sigs").count()
-    assert total == valid.count()
-    assert total > n_half
-    # and no url was double-signed
-    assert cat.read(spark, "minhash_sigs").select("url").distinct().count() == total
+    n1 = cat.commit_info("minhash_sigs").rows
+    frontier = X.valid_documents(docs).join(
+        cat.read(spark, "minhash_sigs").select("url"), "url", "left_anti"
+    )
+    n_frontier = frontier.count()
+    minhash_signatures(
+        frontier.filter(F.abs(F.xxhash64("url")) % 2 == 0).select("url", "text"),
+        cfg.shingle_size, cfg.num_perm, cfg.minhash_seed,
+    ).select(
+        "url",
+        band_hash_array(cfg.lsh_bands, cfg.lsh_rows).alias("bands"),
+        packed_sig16(cfg.num_perm).alias("sig16"),
+    ).write.mode("append").parquet(cat.table_path("minhash_sigs"))
+    landed_files = cat.uncommitted_files("minhash_sigs")
+    landed = cat.read_files(spark, "minhash_sigs", landed_files).count()
+    assert 0 < landed < n_frontier
+    before = set(cat.current_files("minhash_sigs")) | set(landed_files)
+
+    report = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
+    assert not {s.name: s for s in report.stages}["minhash_sigs"].skipped
+    new_files = [f for f in cat.current_files("minhash_sigs") if f not in before]
+    appended = cat.read_files(spark, "minhash_sigs", new_files).count()
+    assert 0 < appended < n_frontier
+    assert appended + landed == n_frontier
+    mh = cat.read(spark, "minhash_sigs")
+    assert mh.count() == mh.select("url").distinct().count() == n1 + n_frontier
+    assert cat.uncommitted_files("minhash_sigs") == []
 
 
 def test_incremental_tick_clusters_rewrites_affected_buckets_only(
@@ -540,80 +547,6 @@ def test_cow_write_empty_tick_carries_snapshot_forward(spark, tmp_path_factory):
     assert n_new_lineage == 0
 
 
-def test_doc_bookmark_kill_window_no_duplicates(spark, docs, tmp_path_factory):
-    """Kill window for the append stages' source bookmarks: a stage's
-    commit landed but its ``<stage>_src`` bookmark write did not. On
-    the next tick the stage has no bookmark and takes the full branch;
-    the defence — anti-joining keys found in the stage's own table —
-    must keep every append table duplicate-free, and clusters and
-    dup_report (whose bookmarks are dropped too) equal to a
-    from-scratch run."""
-    root = str(tmp_path_factory.mktemp("docbm"))
-    cfg = DedupConfig()
-    tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(tick1_docs)
-
-    # simulate the kill: the tick-1 stage commits exist, but every
-    # frontier-fed stage's source bookmark is stale (here: gone entirely)
-    cat = CheckpointCatalog(root)
-    for stage in ("exact_sigs", "exact_edges", "minhash_sigs", "band_rows",
-                  "candidates", "verified_pairs", "anchor_rows", "substr_pairs",
-                  "clusters", "dup_report"):
-        cat.drop_bookmark(f"{stage}_src")
-
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True).run(docs)
-    for stage in ("valid_docs", "exact_sigs", "minhash_sigs"):
-        t = cat.read(spark, stage)
-        assert t.count() == t.select("url").distinct().count(), stage
-    for stage in ("band_rows", "anchor_rows"):
-        t = cat.read(spark, stage)
-        assert t.count() == t.select("url", "band_id", "band_hash").distinct().count(), stage
-    for stage in ("candidates", "verified_pairs", "substr_pairs"):
-        t = cat.read(spark, stage)
-        assert t.count() == t.select("url_a", "url_b").distinct().count(), stage
-    ee = cat.read(spark, "exact_edges")
-    assert ee.count() == ee.select("src", "dst").distinct().count()
-
-    scratch = str(tmp_path_factory.mktemp("docbm-scratch"))
-    DedupPipeline(spark, CheckpointCatalog(scratch), cfg, with_substr=True).run(docs)
-    got = _cluster_partition(cat.read(spark, "clusters").collect())
-    want = _cluster_partition(
-        CheckpointCatalog(scratch).read(spark, "clusters").collect()
-    )
-    assert got == want
-    assert _rows(spark, cat, "dup_report") == _rows(
-        spark, CheckpointCatalog(scratch), "dup_report"
-    )
-
-
-def test_doc_bookmark_stale_after_commit_skip(spark, docs, tmp_path_factory):
-    """Stage committed, bookmark lost, upstream unchanged: the bookmark
-    is the record of what the stage consumed, so the NEXT run re-runs
-    the stage once over the whole upstream, appends nothing (the
-    frontier anti-join), writes the bookmark back and leaves the
-    stage's manifest, and so its consumer's skip, as it was. The tick
-    after that (upstream grown) appends exactly the new docs, no
-    duplicates."""
-    root = str(tmp_path_factory.mktemp("docbm2"))
-    cfg = DedupConfig()
-    tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(tick1_docs)
-    cat = CheckpointCatalog(root)
-    n1 = cat.commit_info("minhash_sigs").rows
-    cat.drop_bookmark("minhash_sigs_src")
-
-    r2 = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(tick1_docs)
-    by2 = {s.name: s for s in r2.stages}
-    assert not by2["minhash_sigs"].skipped and by2["minhash_sigs"].rows == n1
-    assert cat.read_bookmark("minhash_sigs_src") is not None
-    assert by2["band_rows"].skipped
-
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
-    mh = cat.read(spark, "minhash_sigs")
-    assert mh.count() == mh.select("url").distinct().count()
-    assert mh.count() == cat.read(spark, "valid_docs").count()
-
-
 def _copy_catalog(src, tmp_path_factory, name):
     """A copy of the catalog at ``src``, to tick without touching it."""
     import shutil
@@ -641,12 +574,12 @@ def test_blank_docs_tick_skips_after_valid_docs(spark, docs, ran, tmp_path_facto
 
 
 def test_resume_catalog_with_upstream_row_markers(spark, docs, ran, tmp_path_factory):
-    """A catalog written before the bookmark decided skips: its commit
-    markers carry ``upstream_rows``, valid_docs has no bookmark, and the
-    substr_pairs bookmark lacks its verified_pairs manifest. The first
-    rerun catches up (the stages without a matching bookmark run over
-    empty frontiers) with unchanged outputs; the next skips every
-    stage."""
+    """A catalog written before the commit record held everything: its
+    markers carry ``upstream_rows`` but no ``files`` or ``consumed``,
+    and the ``_<t>_PARAMS``, ``_<t>_FRAGS`` and ``_<t>_src_BOOKMARK``
+    sidecars sit beside them. Those sidecars are ignored, so the first
+    rerun takes every stage's full branch once, leaving every table's
+    rows unchanged; the next skips all 11 stages."""
     import glob
     import json
 
@@ -654,17 +587,21 @@ def test_resume_catalog_with_upstream_row_markers(spark, docs, ran, tmp_path_fac
     for marker in glob.glob(f"{cat.root}/_*_COMMIT.json"):
         with open(marker) as f:
             info = json.load(f)
+        t, files, consumed = info["stage"], info.pop("files"), info.pop("consumed")
         with open(marker, "w") as f:
             json.dump({**info, "upstream_rows": {"valid_docs": info["rows"]}}, f)
-    cat.drop_bookmark("valid_docs_src")
-    bm = cat.read_bookmark("substr_pairs_src")
-    del bm["verified_pairs"]
-    cat.write_bookmark("substr_pairs_src", bm)
+        for side, payload in (
+            ("PARAMS", {"params_hash": info["params_hash"], "run_id": info["run_id"]}),
+            ("FRAGS", files),
+            ("src_BOOKMARK", {"params_hash": info["params_hash"], **consumed, "self": files}),
+        ):
+            with open(f"{cat.root}/_{t}_{side}.json", "w") as f:
+                json.dump(payload, f)
     tables = [s.name for s in ran[2].stages]
     want = {t: _rows(spark, ran[0], t) for t in tables}
 
     r1 = DedupPipeline(spark, CheckpointCatalog(cat.root), DedupConfig()).run(docs)
-    assert [s.name for s in r1.stages if not s.skipped] == ["valid_docs", "substr_pairs"]
+    assert [s.name for s in r1.stages if not s.skipped] == tables
     assert {t: _rows(spark, cat, t) for t in tables} == want
     r2 = DedupPipeline(spark, CheckpointCatalog(cat.root), DedupConfig()).run(docs)
     assert all(s.skipped for s in r2.stages), [s.name for s in r2.stages if not s.skipped]
@@ -677,12 +614,11 @@ def test_resume_after_kill_between_append_and_manifest(
     spark, docs, tmp_path_factory, monkeypatch, stage, keys
 ):
     """Kill window inside the catalog write: Spark's append landed, but
-    the run died before the catalog recorded the table's file manifest
-    (``_record_lineage``) and commit marker. The frags sidecar still
-    lists the previous commit's files only, so the rerun must take the
-    uncommitted table's manifest from its directory: otherwise the
-    ``self``-manifest defence misses the killed run's files and
-    appends their rows a second time."""
+    the run died before the catalog read the table's file footers
+    (``_record_lineage``) and replaced its commit record. The previous
+    record stands, and its ``files`` do not list the landed ones, so the
+    rerun finds them as uncommitted files and anti-joins their rows
+    away instead of appending them a second time."""
     root = str(tmp_path_factory.mktemp("killappend"))
     cfg = DedupConfig()
     tick1_docs = docs.filter(F.abs(F.xxhash64("url")) % 3 != 0)
@@ -697,9 +633,13 @@ def test_resume_after_kill_between_append_and_manifest(
         return record(self, name, *args, **kwargs)
 
     monkeypatch.setattr(CheckpointCatalog, "_record_lineage", killed)
+    prev = CheckpointCatalog(root).commit_info(stage)
     with pytest.raises(RuntimeError, match="killed"):
         DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
-    assert CheckpointCatalog(root).commit_info(stage) is None
+    cat = CheckpointCatalog(root)
+    assert cat.commit_info(stage) == prev
+    assert cat.uncommitted_files(stage)
+    assert not set(cat.uncommitted_files(stage)) & set(prev.files)
 
     DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
     t = CheckpointCatalog(root).read(spark, stage)
@@ -708,47 +648,58 @@ def test_resume_after_kill_between_append_and_manifest(
 
 @pytest.mark.parametrize(
     "method, target",
-    [("write", "dup_report"), ("write_bookmark", "dup_report_src"),
-     ("write_bookmark", "clusters_src")],
+    [("write", "dup_report"), ("_commit", "candidates"), ("_commit", "clusters"),
+     ("_commit", "dup_report")],
 )
 def test_killed_tick_clusters_and_report_equal_scratch(
     spark, docs, ran, tmp_path_factory, monkeypatch, method, target
 ):
     """Tick 0 over one third of the docs; tick 1 over two thirds, killed
-    at one write of the clusters → dup_report tail (the report's commit,
-    or the clusters or report bookmark after its stage committed); tick
-    2 over all docs. The report must rebuild every cluster changed since
-    the report's own last commit, not only those the last clusters run
-    changed, so clusters AND dup_report equal a from-scratch run."""
+    in one write: before the dup_report write began, or after the data
+    of candidates (append), clusters (cow) or dup_report (overwrite)
+    landed and before its commit record was replaced; tick 2 over all
+    docs. The report must rebuild every cluster changed since the
+    report's own last commit, not only those the last clusters run
+    changed, so clusters AND dup_report equal a from-scratch run; every
+    append table stays duplicate-free, and the run after tick 2 skips
+    every stage."""
     root = str(tmp_path_factory.mktemp("killtick"))
     cfg = DedupConfig()
     third = F.pmod(F.xxhash64("url"), F.lit(3))
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(
+    DedupPipeline(spark, CheckpointCatalog(root), cfg).run(
         docs.filter(third == 0)
     )
+    prev = CheckpointCatalog(root).commit_info(target)
 
     orig = getattr(CheckpointCatalog, method)
 
     def killed(self, *args, **kwargs):
-        if (args[1] if method == "write" else args[0]) == target:
+        if (args[1] if method == "write" else args[0].stage) == target:
             raise RuntimeError(f"killed at {method}({target})")
         return orig(self, *args, **kwargs)
 
     monkeypatch.setattr(CheckpointCatalog, method, killed)
     with pytest.raises(RuntimeError, match="killed"):
-        DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(
+        DedupPipeline(spark, CheckpointCatalog(root), cfg).run(
             docs.filter(third <= 1)
         )
     monkeypatch.setattr(CheckpointCatalog, method, orig)
+    # the previous record stands; a write killed after its data landed
+    # leaves files that it does not list
+    cat = CheckpointCatalog(root)
+    assert cat.commit_info(target) == prev
+    assert bool(cat.uncommitted_files(target)) == (method == "_commit")
 
-    DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=False).run(docs)
-    # ``ran`` is the module's scratch run over all docs; its substring
-    # pass feeds neither clusters nor dup_report
-    cat, scat = CheckpointCatalog(root), ran[0]
+    DedupPipeline(spark, CheckpointCatalog(root), cfg).run(docs)
+    # ``ran`` is the module's scratch run over all docs
+    scat = ran[0]
     for table in ("clusters", "dup_report"):
         got, want = _rows(spark, cat, table), _rows(spark, scat, table)
         assert got == want, (table, len(got), len(want),
                              len(set(want) - set(got)), len(set(got) - set(want)))
+    _assert_no_duplicate_keys(spark, cat)
+    r3 = DedupPipeline(spark, CheckpointCatalog(root), cfg).run(docs)
+    assert all(s.skipped for s in r3.stages), [s.name for s in r3.stages if not s.skipped]
 
 
 def test_catalog_of_older_schema_version_is_rebuilt(spark, docs, ran, tmp_path_factory,
