@@ -22,8 +22,9 @@ commit record carries the config's params_hash AND whose ``consumed``
 valid_docs: the input fingerprint). That record is the only one a
 stage table has: its manifest, its params and what it consumed decide
 both the skip and the frontier. A table whose record carries other
-params, or that holds data but no record, is dropped before its stage
-runs.
+params, that holds data but no record, or whose record outlived its
+directory (an overwrite killed between removing the old directory and
+renaming the new one in), is dropped before its stage runs.
 
 Tick contract (the reference's operating model — a 1-minute timer over
 a ``hash IS NULL`` work queue, systemd/deduplicator-hash.timer:5-8,
@@ -187,8 +188,9 @@ class DedupPipeline:
         form: re-invoked on a grown upstream it appends only the
         frontier's rows, reusing the data files of a write killed before
         its record. Every stage's table is dropped first unless its
-        record carries these params (``incremental_begin``), so a table
-        that exists here was committed under these params.
+        record carries these params and its directory exists
+        (``incremental_begin``), so a record read here describes a
+        table committed under these params.
 
         ``upstream`` names the producers of a frontier-fed stage, whose
         ``build`` receives the stage's ``Frontier``; ``input_fp`` is the
@@ -198,15 +200,14 @@ class DedupPipeline:
         is skipped while its record carries these params and that
         ``consumed`` equals the current upstream. A ``cow`` write needs
         the record's base: without it the stage overwrites."""
+        t0 = time.time()
         ups = (upstream,) if isinstance(upstream, str) else upstream
         consumed = {u: self.catalog.current_files(u) for u in ups}
         if input_fp is not None:
             consumed["input"] = input_fp
-        info = self.catalog.commit_info(name)
-        if info is not None and info.params_hash == self.ph and info.consumed == consumed:
+        info = self.catalog.incremental_begin(name, self.ph)
+        if info is not None and info.consumed == consumed:
             return StageResult(name, skipped=True, rows=info.rows, wall_ms=0)
-        t0 = time.time()
-        self.catalog.incremental_begin(name, self.ph)
         if ups:
             f = self._frontier(name, ups, info)
             if mode == "cow" and not f.incremental:
@@ -224,13 +225,14 @@ class DedupPipeline:
 
     def _frontier(self, name: str, ups: tuple[str, ...],
                   info: CommitInfo | None) -> Frontier:
-        """The work left for stage ``name``, from ``info``, its commit
-        record (the Iceberg incremental-snapshot-read shape).
+        """The work left for stage ``name``, from ``info``, the commit
+        record ``incremental_begin`` kept (the Iceberg
+        incremental-snapshot-read shape).
 
-        With a record committed under these params that holds
-        ``consumed``, ``new`` holds ONLY each producer's files written
-        since it — never the standing corpus — and ``done`` the stage's
-        uncommitted files, or None when there are none. Never a
+        With a record that holds ``consumed``, ``new`` holds ONLY each
+        producer's files written since it — never the standing corpus —
+        and ``done`` the stage's uncommitted files, or None when there
+        are none. Never a
         ``distinct()`` of the whole own table: for exploded outputs
         (band_rows ~bands rows/doc, anchor_rows ~len/mod rows/doc) that
         is a standing-corpus shuffle per tick (anchor_rows: 14 s of a
@@ -243,11 +245,11 @@ class DedupPipeline:
         which the same anti-join (or, for clusters and dup_report, an
         idempotent relabel / recompute) absorbs.
 
-        Without such a record (first run, params change, a catalog
-        written before records held ``consumed``), ``new`` holds each
-        whole producer table and ``done`` the whole own table, if it
-        exists."""
-        if info is not None and info.params_hash == self.ph and info.consumed is not None:
+        Without such a record (first run, params change, a swap killed
+        before its rename, a catalog written before records held
+        ``consumed``), ``new`` holds each whole producer table and
+        ``done`` the whole own table, if it exists."""
+        if info is not None and info.consumed is not None:
             own = self.catalog.uncommitted_files(name)
             return Frontier(
                 {u: self.catalog.appended_since(self.spark, u, info.consumed.get(u, []))

@@ -29,14 +29,17 @@ so an Iceberg backend is a drop-in):
   write leaves the last commit intact plus, at most, data files that
   no record lists (``uncommitted_files``).
 - ``write(mode="overwrite")``  → ``REPLACE TABLE ... AS SELECT`` /
-  overwrite snapshot commit (here: temp dir + atomic rename).
+  overwrite snapshot commit (here: temp dir, then the old directory
+  removed and the temp dir renamed into place).
 - ``write(mode="append")``     → fast-append snapshot commit (here:
   parquet append). An append of zero rows adds no data file to a
   table that has one, so its manifest, and every consumer's skip test,
   stays unchanged.
 - ``incremental_begin`` → keep a table only while its current snapshot
   carries these params; otherwise ``DROP TABLE`` (a table built under
-  other params, or one with data files but no record).
+  other params, one with data files but no record, or a record whose
+  table directory is gone: an overwrite killed between removing the
+  old directory and renaming the new one into place).
 - ``table_rows`` → ``snapshot.summary["total-records"]`` (here:
   parquet footers; metadata either way, never a scan job).
 - ``CommitInfo.schema`` → the table schema in Iceberg's table
@@ -218,29 +221,28 @@ class CheckpointCatalog:
         return info.rows if info is not None else 0
 
     def drop(self, name: str) -> None:
+        # the record goes first: a kill before the data is removed
+        # leaves data files without a record, which the next
+        # ``incremental_begin`` drops in turn
         self._read_cache.pop(name, None)
+        if os.path.exists(self._marker(name)):
+            os.remove(self._marker(name))
         path = self.table_path(name)
         if os.path.exists(path):
             shutil.rmtree(path)
-        if os.path.exists(self._marker(name)):
-            os.remove(self._marker(name))
 
     # -- snapshot file manifest + incremental reads ------------------------
     def current_files(self, name: str) -> list[str]:
         """The table's data-file relative names — the snapshot manifest.
-        Metadata only: the commit record's ``files``. A table without
-        a record, or with one older than that field, lists its
-        directory."""
+        Metadata only: the commit record's ``files``; none for a table
+        without a record or with one older than that field."""
         info = self.commit_info(name)
-        if info is not None and info.files is not None:
-            return list(info.files)
-        return list(self._dir_fingerprint(name))
+        return list(info.files) if info is not None and info.files is not None else []
 
     def uncommitted_files(self, name: str) -> list[str]:
         """Data files in the table's directory that its record does not
         list: those of a write killed after its data landed and before
-        its record replace. Empty for a table without a record, whose
-        manifest is its directory."""
+        its record replace."""
         committed = set(self.current_files(name))
         return [b for b in self._dir_fingerprint(name) if b not in committed]
 
@@ -270,13 +272,18 @@ class CheckpointCatalog:
         new = [b for b in self.current_files(name) if b not in seen]
         return self.read_files(spark, name, new)
 
-    def incremental_begin(self, name: str, params_hash: str) -> None:
-        """Keep the table only if its record carries ``params_hash``:
-        drop one built under other params, or one holding data files
-        but no record (a first write killed before its record)."""
+    def incremental_begin(self, name: str, params_hash: str) -> CommitInfo | None:
+        """Keep the table only if its record carries ``params_hash``
+        and its directory exists; return the record kept, or None.
+        Drops one built under other params, one holding data files but
+        no record (a first write killed before its record), and a record
+        whose directory is gone (an overwrite or cow swap killed between
+        removing the old directory and renaming the new one in)."""
         info = self.commit_info(name)
-        if self.exists(name) and (info is None or info.params_hash != params_hash):
-            self.drop(name)
+        if info is not None and info.params_hash == params_hash and self.exists(name):
+            return info
+        self.drop(name)
+        return None
 
     # -- writes -----------------------------------------------------------
     def write(
@@ -291,12 +298,14 @@ class CheckpointCatalog:
         """Write a stage output, its lineage rows and, last, its commit
         record, which also carries ``consumed``.
 
-        overwrite and cow build the new snapshot in a temp dir and swap
-        it in with one rename, so a kill mid-write never leaves a
-        half-table. The record is replaced in one ``os.replace`` after
-        the data and lineage landed; a kill before it leaves the
-        previous record, whose ``files`` do not list the new data
-        files.
+        overwrite and cow build the new snapshot in a temp dir, remove
+        the old directory and rename the temp dir into place, so a kill
+        mid-write never leaves a half-table; one between the removal
+        and the rename leaves the previous record without a directory,
+        which ``incremental_begin`` drops. The record is replaced in
+        one ``os.replace`` after the data and lineage landed; a kill
+        before it leaves the previous record, whose ``files`` do not
+        list the new data files.
 
         append and cow raise ``ValueError`` when the DataFrame's column
         names or types differ from the committed schema: the mixed
@@ -313,6 +322,15 @@ class CheckpointCatalog:
                     f"{mode} to {name!r}: columns {got} differ from the "
                     f"committed schema {want}"
                 )
+        # lineage rows only for files the previous record does not list
+        # (cow's carried-forward hardlinks keep their relative names); a
+        # record older than ``files`` lists the directory before the write
+        if prev is None:
+            seen = set()
+        elif prev.files is not None:
+            seen = set(prev.files)
+        else:
+            seen = set(self._dir_fingerprint(name))
         parts = list(partition_by or [])
 
         if mode in ("overwrite", "cow"):
@@ -388,12 +406,7 @@ class CheckpointCatalog:
             raise ValueError(mode)
 
         wall_ms = int((time.time() - t0) * 1000)
-        # lineage rows only for files the previous record does not list:
-        # cow's carried-forward hardlinks keep their relative names
-        files, rows = self._record_lineage(
-            name, params_hash, wall_ms,
-            seen=set(prev.files or []) if prev is not None else set(),
-        )
+        files, rows = self._record_lineage(name, params_hash, wall_ms, seen)
         schema = StructType(
             [f for f in df.schema.fields if f.name not in parts]
             + [df.schema[p] for p in parts]

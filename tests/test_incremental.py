@@ -133,6 +133,44 @@ def test_append_lineage_records_each_file_once(spark, tmp_path):
     assert lin.agg(F.sum("rows")).collect()[0][0] == 12
 
 
+def test_record_older_than_files_keeps_lineage_once(spark, tmp_path):
+    """A record written before it held ``files`` (an older catalog):
+    the next append emits lineage rows for its new files only, not
+    again for the files already in the table."""
+    import json
+
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    for tick in range(2):
+        df = spark.createDataFrame([(f"u{tick}-{i}",) for i in range(4)], "url string")
+        cat.write(df.repartition(2), "inc", params_hash="p", mode="append")
+    marker = cat._marker("inc")
+    with open(marker) as f:
+        info = json.load(f)
+    del info["files"]
+    with open(marker, "w") as f:
+        json.dump(info, f)
+    df = spark.createDataFrame([(f"u2-{i}",) for i in range(4)], "url string")
+    cat.write(df.repartition(2), "inc", params_hash="p", mode="append")
+    lin = cat.lineage(spark).filter("stage = 'inc'")
+    assert lin.groupBy("partition").count().filter("count > 1").count() == 0
+    assert lin.agg(F.sum("rows")).collect()[0][0] == 12
+
+
+def test_incremental_begin_drops_record_without_directory(spark, tmp_path):
+    """An overwrite killed between removing the old directory and
+    renaming the new one in leaves the previous record with no table:
+    ``incremental_begin`` drops that record, so the stage rebuilds
+    instead of reading a missing table."""
+    import shutil
+
+    cat = CheckpointCatalog(str(tmp_path / "cat"))
+    cat.write(spark.createDataFrame([("u1",)], "url string"), "t", params_hash="p")
+    assert cat.incremental_begin("t", "p") == cat.commit_info("t")
+    shutil.rmtree(cat.table_path("t"))
+    assert cat.incremental_begin("t", "p") is None
+    assert cat.commit_info("t") is None
+
+
 def test_overwrite_cleans_orphan_tmp_dirs(spark, tmp_path):
     """A killed run's leftover .tmp-<dead-run> copy is removed by the
     next overwrite of the same table (review regression: orphaned

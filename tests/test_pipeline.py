@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -649,16 +651,17 @@ def test_resume_after_kill_between_append_and_manifest(
 @pytest.mark.parametrize(
     "method, target",
     [("write", "dup_report"), ("_commit", "candidates"), ("_commit", "clusters"),
-     ("_commit", "dup_report")],
+     ("_commit", "dup_report"), ("rename", "clusters")],
 )
 def test_killed_tick_clusters_and_report_equal_scratch(
     spark, docs, ran, tmp_path_factory, monkeypatch, method, target
 ):
     """Tick 0 over one third of the docs; tick 1 over two thirds, killed
-    in one write: before the dup_report write began, or after the data
+    in one write: before the dup_report write began, after the data
     of candidates (append), clusters (cow) or dup_report (overwrite)
-    landed and before its commit record was replaced; tick 2 over all
-    docs. The report must rebuild every cluster changed since the
+    landed and before its commit record was replaced, or after the cow
+    write of clusters removed the old directory and before it renamed
+    the new one in; tick 2 over all docs. The report must rebuild every cluster changed since the
     report's own last commit, not only those the last clusters run
     changed, so clusters AND dup_report equal a from-scratch run; every
     append table stays duplicate-free, and the run after tick 2 skips
@@ -671,24 +674,35 @@ def test_killed_tick_clusters_and_report_equal_scratch(
     )
     prev = CheckpointCatalog(root).commit_info(target)
 
-    orig = getattr(CheckpointCatalog, method)
+    if method == "rename":
+        owner, orig = os, os.rename
+        table = CheckpointCatalog(root).table_path(target)
 
-    def killed(self, *args, **kwargs):
-        if (args[1] if method == "write" else args[0].stage) == target:
-            raise RuntimeError(f"killed at {method}({target})")
-        return orig(self, *args, **kwargs)
+        def killed(src, dst):
+            if dst == table:
+                raise RuntimeError(f"killed at rename({target})")
+            return orig(src, dst)
+    else:
+        owner, orig = CheckpointCatalog, getattr(CheckpointCatalog, method)
 
-    monkeypatch.setattr(CheckpointCatalog, method, killed)
+        def killed(self, *args, **kwargs):
+            if (args[1] if method == "write" else args[0].stage) == target:
+                raise RuntimeError(f"killed at {method}({target})")
+            return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(owner, method, killed)
     with pytest.raises(RuntimeError, match="killed"):
         DedupPipeline(spark, CheckpointCatalog(root), cfg).run(
             docs.filter(third <= 1)
         )
-    monkeypatch.setattr(CheckpointCatalog, method, orig)
+    monkeypatch.setattr(owner, method, orig)
     # the previous record stands; a write killed after its data landed
-    # leaves files that it does not list
+    # leaves files that it does not list, and one killed before its
+    # rename leaves no table directory
     cat = CheckpointCatalog(root)
     assert cat.commit_info(target) == prev
     assert bool(cat.uncommitted_files(target)) == (method == "_commit")
+    assert cat.exists(target) == (method != "rename")
 
     DedupPipeline(spark, CheckpointCatalog(root), cfg).run(docs)
     # ``ran`` is the module's scratch run over all docs
